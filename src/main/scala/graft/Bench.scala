@@ -276,7 +276,7 @@ object Bench {
         val cfg = graft.config.SignalConfig(encoderType = enc,
           minPrice = 39000, maxPrice = 44000, cpmModulationIndex = 0.5f,
           tickDerivativeImagScale = 2.0f)
-        graft.operators.TickPipeline.hotLoopChunked(warmTicks, cfg, assumeOrdered = true)
+        graft.operators.TickPipeline.hotLoopChunked(warmTicks, cfg)
           .queryExecution.toRdd.count()
       }
       // ...and the bar paths (boxcar scan chain + FIR partial-dot fold).

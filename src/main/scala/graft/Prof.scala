@@ -19,8 +19,6 @@ import graft.functions.FirFilter
   *     repartition — what one more exchange costs a small query.
   *   - `PROF_MODE=explain`: dump formatted physical plans for
   *     `PROF_QUERY` (the committed PLANS artifact source).
-  *   - `PROF_MODE=t01`: stage-by-stage decomposition of the tick parse /
-  *     expansion / hot-loop chain.
   *   - `PROF_MODE=q25`: exact vs approx distinct-count decomposition.
   *   - `PROF_MODE=l21`: LSH-pairs / joins / DP / sort decomposition of
   *     the edit-distance re-scorer.
@@ -45,7 +43,6 @@ object Prof {
       case "repeat"  => repeat(spark, sfDir)
       case "plan"    => planSplit(spark, sfDir)
       case "floor"   => floorStages(spark, sfDir)
-      case "t01"     => t01Stages(spark, sfDir)
       case "q25"     => q25Stages(spark, sfDir)
       case "explain" => explain(spark, sfDir)
       case "l21"     => l21Stages(spark, sfDir)
@@ -211,40 +208,6 @@ object Prof {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
     }
-  }
-
-  private def t01Stages(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.{TickPipeline, TickQueries}
-    val base = TickPipeline.syntheticTicks(spark, sfDir)
-    time("synthetic")(base)
-    val lines = base
-      .withColumn("value",
-        when(col("line_idx") % 97 === 0, lit("malformed;data"))
-          .when(col("line_idx") % 89 === 0, lit(""))
-          .otherwise(concat(col("ts_str"), lit(";"), (col("last") - 1).cast("string"),
-            lit(";"), col("last").cast("string"), lit(";"), col("last").cast("string"),
-            lit(";"), col("volume").cast("string"))))
-      .where(length(trim(col("value"))) > 0)
-    time("synthetic+mkline")(lines)
-    val parsed = TickPipeline.parseTickLines(lines, col("value"), col("line_idx"))
-    time("parsed")(parsed)
-    val enc = parsed.select(col("file_pos").as("orig_line"),
-      graft.functions.TickFunctions.encodeTimestamp(col("ts_str")).as("ts_packed"),
-      col("bid"), col("ask"), col("last"), col("volume"))
-    time("parsed+encodeTs")(enc)
-    val indexed = graft.operators.Ordered.withGlobalIndex(parsed, "line_idx2", "file_pos")
-    time("parsed+index")(indexed)
-    time("parsed+index+orderBy")(indexed.orderBy("line_idx2"))
-    time("t01 full (with orderBy)")(TickQueries.queries("t01_tick_parse")(spark, sfDir))
-    val expanded = TickPipeline.syntheticTicksExpanded(spark, sfDir)
-    time("expanded (no orderBy)")(expanded)
-    time("t02 full (with orderBy)")(TickQueries.queries("t02_volume_expansion")(spark, sfDir))
-    val cfg = graft.config.SignalConfig(encoderType = "derivative", minPrice = 39000,
-      maxPrice = 44000, tickDerivativeImagScale = 2.0f)
-    val hot = TickPipeline.hotLoopChunked(TickPipeline.syntheticTicksExpanded(spark, sfDir),
-      cfg, assumeOrdered = true)
-    time("hotloop derivative (no orderBy)")(hot)
-    time("t03 full (with orderBy)")(TickQueries.queries("t03_hotloop_derivative")(spark, sfDir))
   }
 
   private def q25Stages(spark: SparkSession, sfDir: String): Unit = {

@@ -1,104 +1,39 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.GraftInternal
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Scalable total-order utilities.
   *
   * The reference pipeline's semantics hinge on one global sequential
   * index (`tick_idx`, reference src/VolumeExpansion.jl:156,177). A naive
   * `row_number().over(Window.orderBy(...))` serializes the whole dataset
-  * onto one partition — fatal at 100 TB. These helpers implement the
-  * standard two-pass prefix technique instead:
+  * onto one partition — fatal at 100 TB. The index here is the standard
+  * two-pass prefix technique instead ([[Scan]] with a row-count monoid):
   *
-  *   1. range-repartition by the order key (parallel sort),
-  *   2. per-partition partial aggregate (count / sum) — a tiny array,
-  *   3. exclusive prefix-scan of the partials on the driver,
+  *   1. `orderBy` the key (a parallel range sort — free when the input
+  *      already declares that order),
+  *   2. per-partition row counts — a tiny array,
+  *   3. exclusive prefix-scan of the counts on the driver,
   *   4. broadcast offsets back and finish each partition locally.
   *
-  * Wall-clock cost is one range shuffle + one lightweight job, with no
-  * single-partition bottleneck. Like [[Scan]], execution stays on
-  * Tungsten InternalRows end-to-end.
+  * Wall-clock cost is at most one range shuffle + one lightweight job,
+  * with no single-partition bottleneck.
   */
 object Ordered {
 
   /** Append a dense 1-based global row index `outCol`, ordered by
-    * `orderCols`. Equivalent to row_number() over a global orderBy,
-    * but scalable (no single-partition window).
+    * `orderCols` (no columns: the input's own partition-then-row order).
+    * Equivalent to row_number() over a global orderBy, but scalable (no
+    * single-partition window). The output declares itself range-ordered
+    * by `outCol`, so a downstream `orderBy(outCol)` costs no
+    * Exchange/Sort.
     */
   def withGlobalIndex(df: DataFrame, outCol: String, orderCols: String*): DataFrame = {
-    val sorted =
-      if (orderCols.isEmpty) df
-      else df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
-        orderCols.map(col): _*).sortWithinPartitions(orderCols.map(col): _*)
-    // The dense index is strictly increasing in partition-then-row order,
-    // so the output is truthfully range-ordered by it: declare that, and a
-    // downstream orderBy(outCol) costs no Exchange/Sort. (NOT declared for
-    // withPrefixSum: zero weights can tie across a partition boundary,
-    // which would break the same-key-same-partition clustering guarantee.)
-    zipWithOffsets(sorted, outCol, _ => 1L, declareOrdered = true)
-  }
-
-  /** Append the 1-based global prefix sum (inclusive) of `valueCol`
-    * ordered by `orderCols` as `outCol`. `valueCol` must be int or long.
-    */
-  def withPrefixSum(df: DataFrame, valueCol: String, outCol: String, orderCols: String*): DataFrame = {
-    val sorted =
-      if (orderCols.isEmpty) df
-      else df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
-        orderCols.map(col): _*).sortWithinPartitions(orderCols.map(col): _*)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    val weight: InternalRow => Long = sorted.schema(valueCol).dataType match {
-      case LongType    => r => r.getLong(vIdx)
-      case IntegerType => r => r.getInt(vIdx).toLong
-      case other => throw new IllegalArgumentException(
-        s"withPrefixSum needs an int/long column, got $valueCol: $other")
-    }
-    zipWithOffsets(sorted, outCol, weight)
-  }
-
-  /** Two-pass scan: per-partition sums of `weight`, driver prefix-scan,
-    * then a local running sum per partition starting at its offset.
-    */
-  private def zipWithOffsets(df: DataFrame, outCol: String, weight: InternalRow => Long,
-      declareOrdered: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val inTypes = df.schema.fields.map(_.dataType)
-    val nIn = inTypes.length
-    val schema = StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    // localCheckpoint (storage level via GRAFT_SCAN_CHECKPOINT_LEVEL, see
-    // Scan.scanRounds) + lineage truncation: pass 2 and task retries see
-    // exactly the rows pass 1 counted (repartitionByRange+
-    // sortWithinPartitions is not order-stable on tied keys, so a recompute
-    // could otherwise assign different indices than the pass-1 totals).
-    val rdd = Scan.checkpointed(df)
-    // Pass 1: per-partition totals (one number per partition).
-    val partials: Array[Long] = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L; it.foreach(r => s += weight(r)); Iterator((pid, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    // Driver-side exclusive prefix scan (tiny: one entry per partition).
-    val offsets = partials.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    // Pass 2: local running sum from the partition's start offset.
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = bc.value(pid)
-      it.map { r =>
-        acc += weight(r)
-        val vals = new Array[Any](nIn + 1)
-        var i = 0
-        while (i < nIn) { vals(i) = r.get(i, inTypes(i)); i += 1 }
-        vals(nIn) = acc
-        new GenericInternalRow(vals): InternalRow
-      }
-    }
-    if (declareOrdered)
-      GraftInternal.internalCreateDataFrameOrdered(spark, out, schema, Seq(outCol))
-    else GraftInternal.internalCreateDataFrame(spark, out, schema)
+    val sorted = if (orderCols.isEmpty) df else df.orderBy(orderCols.map(col): _*)
+    Scan.scan[Long](sorted, Seq(StructField(outCol, LongType, nullable = false)),
+      zero = 0L, lift = _ => 1L, combine = _ + _, emit = (n, _) => Seq(n + 1),
+      orderedBy = Seq(outCol))
   }
 }

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Requirements: `combine` associative with identity `zero`; the input
   * must already be partition-ordered consistently with the desired total
-  * order (e.g. produced by `repartitionByRange.sortWithinPartitions` or
-  * a freshly-read file source).
+  * order. Callers state that with `orderBy(key)` on the input: Catalyst
+  * drops the sort when the producer declares the order (a scan's
+  * `orderedBy`, [[planFenceOrdered]]) and range-sorts otherwise.
   *
   * Execution works on '''InternalRow''' (UnsafeRow) end-to-end: the
   * input is the plan's Tungsten output, cached as compact binary rows
@@ -101,18 +102,11 @@ object Scan {
     // object rows crowd the heap and every stage GC-thrashes (Soak: 36x
     // checkpoint slowdown for 2.5x rows) — DISK_ONLY/MEMORY_AND_DISK_SER
     // trade per-row codec cost for heap headroom.
-    val rdd = Scan.checkpointed(df)
+    val rdd = checkpointed(df)
     val nRounds = rounds.length
-    val timing = sys.env.contains("GRAFT_SCAN_TIMING")
-    val tCkpt0 = if (timing) System.nanoTime() else 0L
-    if (timing) { // materialize the checkpoint alone for attribution
-      rdd.count()
-      System.err.println(f"[scan] checkpoint: ${(System.nanoTime() - tCkpt0) / 1e9}%.2fs")
-    }
     // offsets(j)(pid) = round-j running state at partition pid's first row.
     val offsets = new Array[Array[Any]](nRounds)
     for (j <- 0 until nRounds) {
-      val tR0 = if (timing) System.nanoTime() else 0L
       val bcPrev = sc.broadcast(offsets.take(j))
       val rnds = rounds
       val partials: Array[(Int, Any)] = rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -131,8 +125,6 @@ object Scan {
       }.collect()
       val byPid = partials.sortBy(_._1).map(_._2)
       offsets(j) = byPid.scanLeft(rounds(j).zero)(rounds(j).combine).toArray
-      if (timing)
-        System.err.println(f"[scan] fold round $j: ${(System.nanoTime() - tR0) / 1e9}%.2fs")
     }
     val bcOff = sc.broadcast(offsets)
     val rnds = rounds
@@ -160,7 +152,7 @@ object Scan {
     * selected by GRAFT_SCAN_CHECKPOINT_LEVEL (default MEMORY_AND_DISK;
     * see [[scanRounds]]).
     */
-  private[operators] def checkpointed(df: DataFrame) = {
+  private def checkpointed(df: DataFrame) = {
     val rows = df.queryExecution.toRdd.map(_.copy())
     sys.env.get("GRAFT_SCAN_CHECKPOINT_LEVEL") match {
       case Some(name) => rows
@@ -170,31 +162,24 @@ object Scan {
     }
   }
 
-  /** Pure plan barrier: re-enters Catalyst through an `ExistingRDD` scan
-    * so no optimizer rule (predicate pushdown, project collapse) can
-    * cross it. Unlike [[scanRounds]] this is LAZY — no job, no
-    * checkpoint — and the upstream plan re-evaluates per downstream job,
-    * so only fence projections that are cheap to recompute.
-    *
-    * Use case: a filter referencing several parsed fields that
-    * PushDownPredicates would otherwise rewrite into N inlined copies of
-    * the whole parse expression below the projection — observed to grow
-    * the t01 generated filter past any JIT budget (five full copies of
-    * the synthetic line-builder, 50s+ wall until C2 caught up). A real
-    * file source is a natural fence; this gives derived sources the same
-    * boundary.
-    */
-  def planFence(df: DataFrame): DataFrame =
-    GraftInternal.internalCreateDataFrame(df.sparkSession,
-      df.queryExecution.toRdd.map(_.copy()), df.schema)
-
-  /** [[planFence]] that also DECLARES the fenced rows' true physical
+  /** Pure plan barrier that DECLARES the fenced rows' true physical
     * layout (globally range-ordered ascending by `sortCols` — see
-    * [[GraftInternal.internalCreateDataFrameOrdered]]'s contract). Use
-    * where the rows are ordered by construction but the ordering column
-    * is computed (e.g. `tick_idx` from a prefix base + replica index), so
-    * Catalyst cannot infer it: the barrier costs one in-task row copy and
-    * deletes a downstream global sort's Exchange+Sort.
+    * [[GraftInternal.internalCreateDataFrameOrdered]]'s contract). It
+    * re-enters Catalyst through an `ExistingRDD` scan, so no optimizer
+    * rule (predicate pushdown, project collapse) can cross it. Unlike
+    * [[scanRounds]] this is LAZY — no job, no checkpoint — and the
+    * upstream plan re-evaluates per downstream job, so only fence
+    * projections that are cheap to recompute.
+    *
+    * Use cases: rows that are ordered by construction but whose ordering
+    * column is computed (e.g. `tick_idx` from a prefix base + replica
+    * index), so Catalyst cannot infer it — the barrier costs one in-task
+    * row copy and deletes a downstream global sort's Exchange+Sort; and
+    * a derived source whose filter PushDownPredicates would otherwise
+    * rewrite into N inlined copies of the whole parse expression (the t01
+    * line builder: five copies, a generated filter past any JIT budget).
+    * A real file source is a natural fence; this gives derived sources
+    * the same boundary.
     */
   def planFenceOrdered(df: DataFrame, sortCols: Seq[String]): DataFrame =
     GraftInternal.internalCreateDataFrameOrdered(df.sparkSession,

@@ -41,13 +41,15 @@ object TickPipeline {
   /** Batch text tick source: read a `;`-delimited tick file, skip blank
     * and malformed lines, keep file order (reference:
     * src/VolumeExpansion.jl:145-218). `line_idx` is 1-based over
-    * surviving lines, assigned with the scalable two-pass index.
+    * surviving lines, assigned with the scalable two-pass index in scan
+    * order: the text source's partition-then-row order IS file order
+    * (`file_pos` = `monotonically_increasing_id` follows it too), so no
+    * sort is needed and the output is declared ordered by `line_idx`.
     */
   def readTickFile(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.textFile(path).toDF("value")
       .withColumn("file_pos", monotonically_increasing_id())
-    Ordered.withGlobalIndex(parseTickLines(raw, col("value"), col("file_pos")),
-      "line_idx", "file_pos")
+    Ordered.withGlobalIndex(parseTickLines(raw, col("value"), col("file_pos")), "line_idx")
   }
 
   /** Parse `;`-delimited tick lines: exactly 5 fields, 4 int fields;
@@ -135,7 +137,6 @@ object TickPipeline {
     val s2 = s1
       .withColumn("is_pre", !col("valid") && col("first_valid").isNull)
       .withColumn("is_hold", !col("valid") && col("first_valid").isNotNull)
-      .withColumn("is_first", col("valid") && col("tick_idx") === col("first_valid"))
       .withColumn("is_elig", col("valid") && col("tick_idx") =!= col("first_valid"))
       // Stage 2: jump guard then winsorize (order matters — reference
       // clips before bar statistics, TickHotLoopF32.jl:347-359).
@@ -239,7 +240,7 @@ object TickPipeline {
       case other => throw new IllegalArgumentException(s"unknown encoder: $other")
     }
 
-    encoded.drop("valid", "first_valid", "is_pre", "is_hold", "is_first",
+    encoded.drop("valid", "first_valid", "is_pre", "is_hold",
       "clip1", "d1", "d", "clip2", "flag_clip", "elig_rn", "bar_id", "bar_pos",
       "is_boundary", "bar_min", "bar_max", "k_bars", "sum_min", "sum_max",
       "inv_q16", "is_elig", "ratio", "inc", "acc", "lut_idx", "enc_rn")
@@ -250,18 +251,16 @@ object TickPipeline {
     * running volume sum) instead of two partition-less windows. Use for
     * large inputs; `expandVolume` and this agree row-for-row.
     */
-  def expandVolumeChunked(lines: DataFrame): DataFrame = {
-    val sorted = lines.repartitionByRange(
-      lines.sparkSession.sessionState.conf.numShufflePartitions, col("line_idx"))
-      .sortWithinPartitions("line_idx")
-    expandSortedLines(sorted, emitLineIdx = false)
-  }
+  def expandVolumeChunked(lines: DataFrame): DataFrame =
+    expandSortedLines(lines.orderBy("line_idx"), emitLineIdx = false)
 
   /** One-Scan expansion over lines that are ALREADY globally range-ordered
     * (range-partitioned + sorted): computes line delta, the tick-index
     * base (prefix volume sum) and optionally a dense 1-based `line_idx`
-    * in a single two-pass scan, then explodes. Output stays globally
-    * ordered by `tick_idx` — downstream scans need no re-sort.
+    * in a single two-pass scan, then explodes. `tick_idx` (prefix base +
+    * ascending replica index) is strictly increasing in the scan's row
+    * order but computed after the scan barrier, so an ordered fence
+    * declares it: a downstream `orderBy("tick_idx")` plans to nothing.
     */
   private def expandSortedLines(sorted: DataFrame, emitLineIdx: Boolean,
       emitTimestamp: Boolean = true): DataFrame = {
@@ -290,13 +289,14 @@ object TickPipeline {
         explode(when(col("volume") >= 1, sequence(lit(1), col("volume")))
           .otherwise(array().cast("array<int>"))))
       .withColumn("tick_idx", col("tick_base") + col("replica_idx"))
-    (if (emitTimestamp && !prePacked)
+    val ticks = (if (emitTimestamp && !prePacked)
        exploded.withColumn("timestamp", TickFunctions.encodeTimestamp(col("ts_str")))
      else exploded)
       .withColumn("raw_price", col("last"))
       .withColumn("price_delta",
         when(col("replica_idx") === 1, col("line_delta")).otherwise(lit(0)))
       .drop("tick_base")
+    Scan.planFenceOrdered(ticks, Seq("tick_idx"))
   }
 
   /** Scalable hot loop: identical output to [[hotLoop]] (same expressions
@@ -320,11 +320,13 @@ object TickPipeline {
     *     the row's Q16 ratio. HEXAD16 and AMC are closed-form (phase from
     *     tick/encoder index) — no third round.
     *
-    * Shuffle inventory: zero when `assumeOrdered` (the expand scan's range
-    * partitioning carries through), else one range shuffle up front.
+    * Ordering contract: the scan asks for its input with
+    * `orderBy("tick_idx")` and declares its output ordered by `tick_idx`.
+    * Input whose producer declares that order (the expansion scans,
+    * `spark.range`) costs no shuffle; any other input is range-sorted
+    * once up front.
     */
-  def hotLoopChunked(ticks: DataFrame, cfg: SignalConfig,
-      assumeOrdered: Boolean = false): DataFrame = {
+  def hotLoopChunked(ticks: DataFrame, cfg: SignalConfig): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField}
     import Scan.Round
@@ -332,12 +334,7 @@ object TickPipeline {
     val minP = lit(cfg.minPrice); val maxP = lit(cfg.maxPrice)
     val maxJ = lit(cfg.maxJump); val winz = lit(cfg.winsorizeDeltaThreshold)
 
-    val sorted =
-      if (assumeOrdered) ticks
-      else ticks.repartitionByRange(
-        ticks.sparkSession.sessionState.conf.numShufflePartitions, col("tick_idx"))
-        .sortWithinPartitions("tick_idx")
-    val s1 = sorted
+    val s1 = ticks.orderBy("tick_idx")
       .withColumn("valid", col("raw_price").between(minP, maxP))
       .withColumn("clip1", abs(col("price_delta")) > maxJ)
       .withColumn("d1", when(col("clip1"),
@@ -430,7 +427,6 @@ object TickPipeline {
     val appended =
       Seq(StructField("is_pre", BooleanType, nullable = false),
         StructField("is_hold", BooleanType, nullable = false),
-        StructField("is_first", BooleanType, nullable = false),
         StructField("is_elig", BooleanType, nullable = false),
         StructField("elig_rn", LongType, nullable = false),
         StructField("enc_rn", LongType, nullable = false),
@@ -450,8 +446,7 @@ object TickPipeline {
         val boundary = isElig && eligRn % statsBar == 0
         val d = r.getInt(dIdx)
         val inv = invFor(st(1).asInstanceOf[BarSeg], isElig, boundary, d)
-        val base = Seq[Any](isPre, !valid && seen, valid && !seen, isElig,
-          eligRn, encRn, inv)
+        val base = Seq[Any](isPre, !valid && seen, isElig, eligRn, encRn, inv)
         if (isDeriv) base :+ st(2).asInstanceOf[(Boolean, Double)]._2
         else if (isCpm) {
           val inc = if (isElig)
@@ -511,7 +506,7 @@ object TickPipeline {
       case other => throw new IllegalArgumentException(s"unknown encoder: $other")
     }
 
-    encoded.drop("valid", "is_pre", "is_hold", "is_first", "is_elig",
+    encoded.drop("valid", "is_pre", "is_hold", "is_elig",
       "clip1", "d1", "d", "clip2", "flag_clip", "elig_rn", "enc_rn",
       "inv_q16", "ratio", "acc", "lut_idx", "prev_ratio", "cum_inc")
   }
@@ -553,9 +548,7 @@ object TickPipeline {
     // The bars table is ticks/N — smaller but still unbounded, so its
     // cumulative chain uses the same two-pass [[Scan]] technique as the
     // tick stream (no partition-less window, no broadcast).
-    val sortedBars = withAvg.repartitionByRange(
-      ticks.sparkSession.sessionState.conf.numShufflePartitions, col("bar_idx"))
-      .sortWithinPartitions("bar_idx")
+    val sortedBars = withAvg.orderBy("bar_idx")
 
     // One multi-round scan (checkpoint the bars once):
     //   round 0 — running high/low sums + previous bar average (monoid:
@@ -729,9 +722,9 @@ object TickPipeline {
 
   /** Fused synthetic source: ONE range sort of the lineitem keys, then a
     * single [[Scan]] computing line index, line delta and tick base
-    * together, then expansion — output globally ordered by `tick_idx`
-    * (feed [[hotLoopChunked]] with `assumeOrdered = true`). Saves the
-    * second range shuffle + scan of the index-then-expand composition.
+    * together, then expansion — output declared globally ordered by
+    * `tick_idx`, so [[hotLoopChunked]] adds no shuffle. Saves the second
+    * range shuffle + scan of the index-then-expand composition.
     *
     * `withTimestamp = false` skips the ts_str build + 8-byte pack
     * entirely — the string column cannot be pruned through the expand
@@ -754,9 +747,7 @@ object TickPipeline {
         (lit(20250301) + (col("l_orderkey") + col("l_linenumber")) % 28).cast("string"),
         lit(" 070000 0000000"))).as("timestamp"))
       else Nil
-    val sorted = keyed.repartitionByRange(
-      spark.sessionState.conf.numShufflePartitions, col("l_orderkey"), col("l_linenumber"))
-      .sortWithinPartitions("l_orderkey", "l_linenumber")
+    val sorted = keyed.orderBy("l_orderkey", "l_linenumber")
       .select(tsCol ++ Seq(
         (lit(39000) + (col("l_orderkey") * 7 + col("l_linenumber") * 131
           + col("l_suppkey") * 17) % 5200 - 100).cast("int").as("last"),
@@ -772,7 +763,7 @@ object TickPipeline {
       maxPrice = 44000, tickDerivativeImagScale = 2.0f)
     val barCfg = BarConfig(enabled = true, ticksPerBar = 21, barMethod = "boxcar")
     val ticks = syntheticTicksExpanded(spark, sfDir)
-    val hot = hotLoopChunked(ticks, cfg, assumeOrdered = true)
+    val hot = hotLoopChunked(ticks, cfg)
     enrich(hot, bars(ticks, barCfg), barCfg.ticksPerBar)
       .orderBy("tick_idx")
   }

@@ -75,7 +75,6 @@ object TickQueries {
        |  SELECT *,
        |    (NOT valid) AND first_valid IS NULL AS is_pre,
        |    (NOT valid) AND first_valid IS NOT NULL AS is_hold,
-       |    valid AND tick_idx = first_valid AS is_first,
        |    valid AND tick_idx <> first_valid AS is_elig,
        |    abs(price_delta) > $maxJ AS clip1,
        |    CASE WHEN abs(price_delta) > $maxJ
@@ -147,9 +146,9 @@ object TickQueries {
   // ---------------------------------------------------------------- queries
 
   /** T2/T3: line parsing with malformed/blank drop + timestamp packing.
-    * The synthetic line build sits behind a [[Scan.planFence]]: a real
-    * tick source is a text-file scan (a natural optimizer boundary), and
-    * without the fence PushDownPredicates inlines five copies of the
+    * The synthetic line build sits behind a [[Scan.planFenceOrdered]]: a
+    * real tick source is a text-file scan (a natural optimizer boundary),
+    * and without the fence PushDownPredicates inlines five copies of the
     * whole line-builder into the parse filter — a generated method far
     * past the JIT budget.
     */
@@ -203,17 +202,11 @@ object TickQueries {
     * asserted in ChunkedParitySpec and by this oracle).
     */
   def qVolumeExpansion(s: SparkSession, d: String): DataFrame =
-    // tick_idx = prefix-volume base + ascending replica index is strictly
-    // increasing in the expand scan's row order, but it is COMPUTED after
-    // the scan barrier so Catalyst cannot see the ordering. The ordered
-    // fence (one in-task row copy) declares it, turning the final
-    // orderBy("tick_idx") into a no-op instead of a full Exchange+Sort of
-    // the expanded stream.
-    Scan.planFenceOrdered(
-      TickPipeline.syntheticTicksExpanded(s, d)
-        .select(col("tick_idx"), col("line_idx"), col("replica_idx").cast("long"),
-          col("timestamp").as("ts_packed"), col("raw_price"), col("price_delta")),
-      Seq("tick_idx"))
+    // The expansion declares its tick_idx order, so the final orderBy
+    // plans to nothing.
+    TickPipeline.syntheticTicksExpanded(s, d)
+      .select(col("tick_idx"), col("line_idx"), col("replica_idx").cast("long"),
+        col("timestamp").as("ts_packed"), col("raw_price"), col("price_delta"))
       .orderBy("tick_idx")
   val qVolumeExpansionSql: String =
     s"""WITH $ticksCte
@@ -226,7 +219,7 @@ object TickQueries {
       // keep the scan checkpoints all-primitive (see syntheticTicksExpanded).
       TickPipeline.syntheticTicksExpanded(s, d, withTimestamp = false)
         .select("tick_idx", "raw_price", "price_delta"),
-      withCfg(enc), assumeOrdered = true)
+      withCfg(enc))
       .select("tick_idx", "raw_price", "price_delta", "status_flag",
         "signal_re", "signal_im", "normalization")
       .orderBy("tick_idx")
@@ -447,7 +440,7 @@ object TickQueries {
         TickPipeline.hotLoopChunked(
           TickPipeline.syntheticTicksExpanded(s, d, withTimestamp = false)
             .select("tick_idx", "raw_price", "price_delta"),
-          withCfg("derivative"), assumeOrdered = true),
+          withCfg("derivative")),
         tickStart = 100, numRecords = 2000), Seq("tick_idx"))
       .orderBy("tick_idx")
   val qTickCaptureSql: String =

@@ -23,7 +23,6 @@ object RelationalQueries {
   private def nat(s: SparkSession, d: String) = Tables.load(s, d, "nation")
   private def reg(s: SparkSession, d: String) = Tables.load(s, d, "region")
   private def part(s: SparkSession, d: String) = Tables.load(s, d, "part")
-  private def supp(s: SparkSession, d: String) = Tables.load(s, d, "supplier")
 
   /** Exact decimal sum of a double column, returned as double. */
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")

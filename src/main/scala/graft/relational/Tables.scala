@@ -6,10 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * One parquet file per table under the scale-factor directory.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, sfDir)
     else spark.read.parquet(s"$sfDir/$name.parquet")
@@ -31,8 +27,4 @@ object Tables {
       case _ => raw
     }
   }
-
-  /** Register every table as a temp view (used by SQL-flavored queries). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -158,15 +158,23 @@ object HotLoopStep {
     }
   }
 
-  /** Fold a whole ordered batch (used by tests and small batch jobs). */
-  def run(ticks: Seq[TickIn], cfg: SignalConfig): Seq[TickOut] = {
-    var s = HotLoopState()
+  /** Fold `ticks` in the order given (no sorting: callers that need
+    * tick_idx order sort first), starting from `state`; returns the
+    * final state and one output per tick.
+    */
+  def fold(state: HotLoopState, ticks: Seq[TickIn],
+      cfg: SignalConfig): (HotLoopState, Seq[TickOut]) = {
+    var s = state
     val out = Seq.newBuilder[TickOut]
     ticks.foreach { t =>
       val (s2, o) = step(s, t, cfg)
       s = s2
       out += o
     }
-    out.result()
+    (s, out.result())
   }
+
+  /** Fold a whole ordered batch (used by tests and small batch jobs). */
+  def run(ticks: Seq[TickIn], cfg: SignalConfig): Seq[TickOut] =
+    fold(HotLoopState(), ticks, cfg)._2
 }

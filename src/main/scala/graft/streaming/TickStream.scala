@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -23,13 +23,6 @@ import graft.config.{FlowControlConfig, SignalConfig}
   * independent sequential stream.
   */
 object TickStream {
-
-  /** Streaming file source -> parsed ticks. The text source preserves
-    * per-file order; `volume`-expansion and tick indexing happen inside
-    * the stateful step so they survive across micro-batches.
-    */
-  def readTickStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.option("maxFilesPerTrigger", 1).text(dir)
 
   /** T10: the reference's flow-control delay (inter-tick sleep,
     * src/VolumeExpansion.jl:18-30) maps to micro-batch cadence — a
@@ -50,12 +43,8 @@ object TickStream {
       .flatMapGroupsWithState[HotLoopState, TickOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (_, it, state: GroupState[HotLoopState]) =>
-          var s = state.getOption.getOrElse(HotLoopState())
-          val outs = it.toSeq.sortBy(_.tick_idx).map { t =>
-            val (s2, o) = HotLoopStep.step(s, t, cfg)
-            s = s2
-            o
-          }
+          val (s, outs) = HotLoopStep.fold(state.getOption.getOrElse(HotLoopState()),
+            it.toSeq.sortBy(_.tick_idx), cfg)
           state.update(s)
           outs.iterator
       }
@@ -78,14 +67,10 @@ object TickStream {
       .flatMapGroupsWithState[HotLoopState, (String, TickOut)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (sym, it, state: GroupState[HotLoopState]) =>
-          var s = state.getOption.getOrElse(HotLoopState())
-          val outs = it.toSeq.sortBy(_._2.tick_idx).map { case (_, t) =>
-            val (s2, o) = HotLoopStep.step(s, t, cfg)
-            s = s2
-            (sym, o)
-          }
+          val (s, outs) = HotLoopStep.fold(state.getOption.getOrElse(HotLoopState()),
+            it.map(_._2).toSeq.sortBy(_.tick_idx), cfg)
           state.update(s)
-          outs.iterator
+          outs.iterator.map(o => (sym, o))
       }
   }
 
@@ -111,14 +96,10 @@ object TickStream {
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[(String, TickIn)],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(String, TickOut)] = {
-      var s = if (st.exists()) st.get() else HotLoopState()
-      val outs = rows.toSeq.sortBy(_._2.tick_idx).map { case (_, t) =>
-        val (s2, o) = HotLoopStep.step(s, t, cfg)
-        s = s2
-        (key, o)
-      }
+      val (s, outs) = HotLoopStep.fold(if (st.exists()) st.get() else HotLoopState(),
+        rows.map(_._2).toSeq.sortBy(_.tick_idx), cfg)
       st.update(s)
-      outs.iterator
+      outs.iterator.map(o => (key, o))
     }
   }
 

@@ -13,23 +13,14 @@ import graft.SparkSpec
 class OrderedSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val df = (1 to 1000).map(i => ((i * 7919) % 1000, i % 5 + 1))
-    .toDF("key", "weight").repartition(7)
+  private lazy val df = (1 to 1000).map(i => (i * 7919) % 1000)
+    .toDF("key").repartition(7)
 
   test("withGlobalIndex equals row_number over a global orderBy") {
     val fast = Ordered.withGlobalIndex(df, "idx", "key")
       .select($"key", $"idx").as[(Int, Long)].collect().sortBy(_._1)
     val slow = df.withColumn("idx", row_number().over(Window.orderBy("key")).cast("long"))
       .select($"key", $"idx").as[(Int, Long)].collect().sortBy(_._1)
-    assert(fast.toSeq == slow.toSeq)
-  }
-
-  test("withPrefixSum equals sum over cumulative window") {
-    val fast = Ordered.withPrefixSum(df, "weight", "cum", "key")
-      .select($"key", $"cum").as[(Int, Long)].collect().sortBy(_._1)
-    val slow = df.withColumn("cum", sum("weight").over(
-        Window.orderBy("key").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select($"key", $"cum").as[(Int, Long)].collect().sortBy(_._1)
     assert(fast.toSeq == slow.toSeq)
   }
 

@@ -73,7 +73,7 @@ object PipelineProps extends Properties("TickPipeline") {
       new org.apache.spark.sql.types.StructType()
         .add("tick_idx", "long").add("timestamp", "long")
         .add("raw_price", "int").add("price_delta", "int"))
-    TickPipeline.hotLoopChunked(ticks, hotCfg, assumeOrdered = true)
+    TickPipeline.hotLoopChunked(ticks, hotCfg)
       .select(col("tick_idx"), col("raw_price"), col("signal_re"),
         col("status_flag"))
       .collect().sortBy(_.getLong(0))

@@ -19,7 +19,7 @@ class CaptureSpec extends SparkSpec {
       b.fields.map(f => (f.name, f.dataType)).toSeq
 
   test("tick capture: 7-col schema, windowed by dense tick range, parquet round-trip") {
-    val hot = TickPipeline.hotLoopChunked(ticks, cfg, assumeOrdered = true)
+    val hot = TickPipeline.hotLoopChunked(ticks, cfg)
     val cap = Capture.tickCapture(hot, tickStart = 100, numRecords = 500)
     assert(sameShape(cap.schema, Capture.tickCaptureSchema))
     val rows = cap.collect()
@@ -50,7 +50,7 @@ class CaptureSpec extends SparkSpec {
   }
 
   test("tick CSV export round-trips through the schema-checked reader") {
-    val hot = TickPipeline.hotLoopChunked(ticks, cfg, assumeOrdered = true)
+    val hot = TickPipeline.hotLoopChunked(ticks, cfg)
     val cap = Capture.tickCapture(hot, tickStart = 0, numRecords = 200)
     val dir = Files.createTempDirectory("tickcsv").toString
     Capture.writeCsv(cap, dir)
