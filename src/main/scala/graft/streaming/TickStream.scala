@@ -249,8 +249,7 @@ object TickStream {
   case object Analytics extends ConsumerType  // drop-on-full
 
   /** Per-consumer delivery stats (reference: TripleSplitSystem.jl:272-305).
-    * The queue exists only for local (reference-emulation) delivery; the
-    * distributed path counts without materializing on the driver.
+    * The queue exists only for local (reference-emulation) delivery.
     */
   final class ConsumerStats(val name: String, val kind: ConsumerType, val bufferSize: Int) {
     val messagesSent = new AtomicLong
@@ -259,8 +258,6 @@ object TickStream {
     /** Current buffer fill consulted by the drop policy. Local delivery
       * fills `queue`; an external sink can override via [[fillProbe]]. */
     @volatile var fillProbe: () => Int = () => queue.size
-    def fillRatio: Double =
-      if (bufferSize == 0) 0.0 else fillProbe().toDouble / bufferSize
   }
 
   /** T34: consumer registry with subscribe/unsubscribe (reference:
@@ -315,16 +312,23 @@ object TickStream {
     * One `foreachBatch` fan-out so all consumers observe the same
     * micro-batch — mirroring broadcast_to_all! (TripleSplitSystem.jl:172-259).
     *
-    * The hot path is driver-light: per batch, ONE small aggregate job
-    * computes the batch count; a consumer that must drop pays one extra
-    * top-`room` job (TakeOrdered — O(n log room), no full sort) to find
-    * its cutoff tick, so delivery is exact even when `tick_idx` has gaps
-    * (upstream drops, files split across triggers). Delivery happens
-    * partition-side through
-    * `partitionSink` (rows stream through executors; sent/dropped counts
-    * come from the aggregate). `localDeliver` instead collects each
-    * consumer's share to the driver queues — the reference-emulation mode
-    * used by parity tests; never use it at scale.
+    * Each micro-batch is ONE Spark job: the job that runs the stateful
+    * stage. Before it starts, the driver fixes each consumer's room —
+    * unbounded for Priority, `bufferSize - fillProbe()` otherwise — which
+    * does not depend on the batch size. Each partition buffers its rows,
+    * hands them to `partitionSink` for every Priority consumer (the
+    * unbounded stream never leaves the executors), and returns its row
+    * count plus its `keep` smallest rows by `tick_idx`, `keep` being the
+    * largest room among the consumers served from the driver. A dropping
+    * consumer's share is the batch's `sent = min(n, room)` smallest rows,
+    * which always lie in the union of each partition's `sent` smallest;
+    * the driver takes them from the merged candidates and calls
+    * `partitionSink` with them (at most `room` rows, in `tick_idx` order).
+    * The cut is by rank, so delivery is exact even when `tick_idx` has
+    * gaps (upstream drops, files split across triggers). `localDeliver`
+    * instead brings the whole batch to the driver and fills each
+    * consumer's queue with its first `sent` rows — the reference-emulation
+    * mode used by parity tests; never use it at scale.
     */
   def broadcastTo(
       enriched: Dataset[TickOut],
@@ -338,49 +342,44 @@ object TickStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[TickOut], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
         val batchT0 = System.currentTimeMillis()
-        val persisted = batch.persist()
-        try {
-          val n = persisted.agg(count(lit(1))).head().getLong(0)
-          registry.totalBroadcasts.incrementAndGet()
-          registry.rowsBroadcast.addAndGet(n)
-          if (n > 0) {
-            registry.active.foreach { c =>
-              val room = c.kind match {
-                case Priority => n
-                case _ => math.max(0L, (c.bufferSize - c.fillProbe()).toLong)
-              }
-              val sent = math.min(n, room)
-              val share =
-                if (sent == n) persisted
-                else if (sent == 0) persisted.filter(lit(false))
-                else {
-                  // cutoff = the sent-th smallest tick_idx (tick_idx is
-                  // unique, so <= cutoff delivers exactly `sent` rows even
-                  // across gaps in the index)
-                  val cutoff = persisted.select(col("tick_idx"))
-                    .orderBy(col("tick_idx")).limit(sent.toInt)
-                    .agg(max(col("tick_idx"))).head().getLong(0)
-                  persisted.filter(col("tick_idx") <= cutoff)
-                }
-              if (localDeliver) {
-                // Reference-emulation: in-process queues on the driver.
-                share.orderBy(col("tick_idx")).collect().foreach(c.queue.add)
-              } else
-                partitionSink.foreach { sink =>
-                  val name = c.name
-                  share.as[TickOut].foreachPartition((it: Iterator[TickOut]) => sink(name, it))
-                }
-              c.messagesSent.addAndGet(sent)
-              c.messagesDropped.addAndGet(n - sent)
+        val consumers = registry.active
+        val rooms = consumers.map { c =>
+          if (c.kind == Priority) Long.MaxValue
+          else math.max(0L, (c.bufferSize - c.fillProbe()).toLong)
+        }
+        val sink = if (localDeliver) None else partitionSink
+        val priorityNames = consumers.filter(_.kind == Priority).map(_.name)
+        // Consumers served from the merged candidates on the driver: all of
+        // them in localDeliver mode, the dropping ones behind a sink.
+        val fromDriver = consumers.map(c =>
+          localDeliver || (sink.isDefined && c.kind != Priority))
+        val keep = rooms.zip(fromDriver).collect { case (r, true) => r }
+          .maxOption.fold(0)(r => math.min(r, Int.MaxValue.toLong).toInt)
+        val parts = batch.sparkSession.sparkContext.runJob(batch.rdd, (it: Iterator[TickOut]) => {
+          val rows = it.toArray
+          sink.foreach(s => priorityNames.foreach(name => s(name, rows.iterator)))
+          (rows.length.toLong,
+            if (keep == 0) Array.empty[TickOut] else rows.sortBy(_.tick_idx).take(keep))
+        })
+        val n = parts.iterator.map(_._1).sum
+        registry.totalBroadcasts.incrementAndGet()
+        registry.rowsBroadcast.addAndGet(n)
+        if (n > 0) {
+          val candidates = parts.flatMap(_._2).sortBy(_.tick_idx)
+          consumers.lazyZip(rooms).lazyZip(fromDriver).foreach { (c, room, driverSide) =>
+            val sent = math.min(n, room)
+            if (driverSide && sent > 0) {
+              val share = candidates.iterator.take(sent.toInt)
+              if (localDeliver) share.foreach(c.queue.add)
+              else sink.foreach(_(c.name, share))
             }
-            registry.successfulBroadcasts.incrementAndGet()
+            c.messagesSent.addAndGet(sent)
+            c.messagesDropped.addAndGet(n - sent)
           }
-          registry.recordBatchMs(System.currentTimeMillis() - batchT0)
-          ()
-        } finally persisted.unpersist()
+          registry.successfulBroadcasts.incrementAndGet()
+        }
+        registry.recordBatchMs(System.currentTimeMillis() - batchT0)
       }
       .start()
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graftest.BatchJobCounter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -310,6 +311,84 @@ class TickStreamSpec extends SparkSpec {
       assert(mon.messagesSent.get() == 120 && sentMon.value == 120L)
       assert(mon.messagesDropped.get() == 180)
       assert(prio.queue.isEmpty && mon.queue.isEmpty) // nothing on the driver
+    } finally query.stop()
+  }
+
+  test("fan-out runs one Spark job per micro-batch, also when a consumer is cut") {
+    implicit val sqlCtx = spark.sqlContext
+    val ticks = mkTicks(350)
+    val input = MemoryStream[TickIn]
+    val enriched = TickStream.hotLoopStream(input.toDS(), cfg)
+    val registry = new TickStream.ConsumerRegistry
+    val prio = registry.subscribe("prio", TickStream.Priority, 64)
+    val mon = registry.subscribe("mon", TickStream.Monitoring, 100)
+    val sink: (String, Iterator[TickOut]) => Unit = (_, it) => it.foreach(_ => ())
+    val ckpt = Files.createTempDirectory("ckpt_jobs").toString
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
+    val jobs = new BatchJobCounter(spark.sparkContext, query.id.toString)
+    spark.sparkContext.addSparkListener(jobs)
+    def lastDataBatch: Long =
+      query.recentProgress.filter(_.numInputRows > 0).map(_.batchId).max
+    try {
+      // Every consumer has room: the hot-loop job is the only job.
+      input.addData(ticks.take(50): _*); query.processAllAvailable()
+      val fits = lastDataBatch
+      assert(mon.messagesSent.get() == 50 && mon.messagesDropped.get() == 0)
+      assert(jobs.jobsOf(fits) == 1)
+      // The Monitoring consumer is cut (room 100 of 300 rows).
+      input.addData(ticks.drop(50): _*); query.processAllAvailable()
+      val cut = lastDataBatch
+      assert(cut > fits)
+      assert(mon.messagesSent.get() == 150 && mon.messagesDropped.get() == 200)
+      assert(prio.messagesSent.get() == 350 && prio.messagesDropped.get() == 0)
+      assert(jobs.jobsOf(cut) == 1)
+    } finally {
+      query.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("drop cutoff is exact when the batch spans several state partitions") {
+    implicit val sqlCtx = spark.sqlContext
+    // Globally unique, gapped tick_idx interleaved across five symbols:
+    // the smallest ticks of the batch come from every symbol, and the
+    // symbols hash to several state partitions.
+    val syms = Seq("YM", "ES", "NQ", "CL", "GC")
+    val rnd = new scala.util.Random(41)
+    val keyed = for (i <- 0 until 80; (s, k) <- syms.zipWithIndex) yield
+      (s, TickIn(3L * (i * syms.size + k) + 1, 7L, 39000 + rnd.nextInt(5200) - 100,
+        if (i == 0) 0 else rnd.nextInt(41) - 20))
+    val n = keyed.size.toLong
+    val byRank = keyed.map(_._2.tick_idx).sorted
+    val input = MemoryStream[(String, TickIn)]
+    val enriched = TickStream.hotLoopStreamKeyed(input.toDS(), cfg).map(_._2)
+    val registry = new TickStream.ConsumerRegistry
+    val prio = registry.subscribe("prio", TickStream.Priority, 64)
+    val mon = registry.subscribe("mon", TickStream.Monitoring, 100)
+    mon.fillProbe = () => 25 // room 75
+    val ana = registry.subscribe("ana", TickStream.Analytics, 50)
+    ana.fillProbe = () => 50 // full: room 0
+    val rows = spark.sparkContext.collectionAccumulator[(String, Long)]("fanout_rows")
+    val prioParts = spark.sparkContext.collectionAccumulator[Int]("prio_parts")
+    val sink: (String, Iterator[TickOut]) => Unit = { (name, it) =>
+      val ids = it.map(_.tick_idx).toSeq
+      ids.foreach(i => rows.add((name, i)))
+      if (name == "prio" && ids.nonEmpty) prioParts.add(org.apache.spark.TaskContext.getPartitionId())
+    }
+    val ckpt = Files.createTempDirectory("ckpt_parts").toString
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
+    try {
+      input.addData(keyed: _*); query.processAllAvailable()
+      assert(prioParts.value.asScala.toSet.size >= 2, "batch did not span several partitions")
+      val got = rows.value.asScala.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+      assert(got("prio") == byRank)
+      assert(got("mon") == byRank.take(75))
+      assert(!got.contains("ana"))
+      assert(prio.messagesSent.get() == n && prio.messagesDropped.get() == 0)
+      assert(mon.messagesSent.get() == 75 && mon.messagesDropped.get() == n - 75)
+      assert(ana.messagesSent.get() == 0 && ana.messagesDropped.get() == n)
+      Seq(prio, mon, ana).foreach(c =>
+        assert(c.messagesSent.get() + c.messagesDropped.get() == n, c.name))
     } finally query.stop()
   }
 
