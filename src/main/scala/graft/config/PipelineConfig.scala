@@ -23,6 +23,16 @@ case class SignalConfig(
     honorAmcCarrierPeriod: Boolean = false,
     tickDerivativeImagScale: Float = 4.0f
 ) {
+  /** AMC carrier phase increment per encoder call, in Q32 turns: the
+    * reference's hardcoded 2^32/16 (TickHotLoopF32.jl:115 ignores its own
+    * amc_carrier_period), unless honorAmcCarrierPeriod derives it from
+    * the configured period. The one definition for the batch and
+    * streaming hot loops.
+    */
+  def amcIncrementQ32: Long =
+    if (honorAmcCarrierPeriod) math.floor(4294967296.0 / amcCarrierPeriod + 0.5).toLong
+    else 268435456L
+
   def validate(): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (agcAlpha <= 0f || agcAlpha >= 1f) errs += s"agc_alpha must be in (0,1): $agcAlpha"

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * batch analog of the reference pipeline's consumer/manager statistics
   * (reference: src/TripleSplitSystem.jl consumer stats,
   * src/PipelineOrchestrator.jl metrics; mapped for streaming by
-  * `TickStream.managedPipeline`). Row counts, null counts, and value
+  * `TickStream.runManaged`). Row counts, null counts, and value
   * bounds are collected ON THE SAME PASS as whatever action consumes
   * the DataFrame: `observe` rides the existing job as accumulator
   * updates, so the audit adds ZERO extra scans and no cache — at

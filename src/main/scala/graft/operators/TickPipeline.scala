@@ -109,16 +109,6 @@ object TickPipeline {
     * Input: (tick_idx, raw_price, price_delta [, ...passthrough]).
     * Output adds: signal_re, signal_im, normalization, status_flag.
     */
-  /** AMC carrier phase increment per encoder call: the reference's
-    * hardcoded 2^32/16 (TickHotLoopF32.jl:115 ignores its own
-    * amc_carrier_period), unless the default-off honorAmcCarrierPeriod
-    * extension derives it from the configured period.
-    */
-  private def amcIncrement(cfg: SignalConfig): Long =
-    if (cfg.honorAmcCarrierPeriod)
-      math.floor(4294967296.0 / cfg.amcCarrierPeriod + 0.5).toLong
-    else 268435456L
-
   def hotLoop(ticks: DataFrame, cfg: SignalConfig): DataFrame = {
     val wOrd = Window.orderBy("tick_idx")
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -230,7 +220,7 @@ object TickPipeline {
         // increment from the configured period instead.
         val withAcc = s6
           .withColumn("enc_rn", sum(when(!col("is_pre"), 1L).otherwise(0L)).over(wCum))
-          .withColumn("acc", pmod(col("enc_rn") * lit(amcIncrement(cfg)), lit(4294967296L)))
+          .withColumn("acc", pmod(col("enc_rn") * lit(cfg.amcIncrementQ32), lit(4294967296L)))
           .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
         withAcc
           .withColumn("signal_re", when(col("is_pre"), lit(0.0))
@@ -497,7 +487,7 @@ object TickPipeline {
         // round 0 (hardcoded period-16 increment — reference quirk,
         // TickHotLoopF32.jl:115; honorAmcCarrierPeriod derives it from
         // the configured period instead — default-off extension).
-        s4.withColumn("acc", pmod(col("enc_rn") * lit(amcIncrement(cfg)), lit(4294967296L)))
+        s4.withColumn("acc", pmod(col("enc_rn") * lit(cfg.amcIncrementQ32), lit(4294967296L)))
           .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
           .withColumn("signal_re", when(col("is_pre"), lit(0.0))
             .otherwise(col("ratio") * TickFunctions.lutLookup(cpmLutRe, col("lut_idx") + 1)) + 0.0)

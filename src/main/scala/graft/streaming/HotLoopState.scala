@@ -41,7 +41,6 @@ object HotLoopStep {
   val FlagOk: Byte = 0x00
   val FlagHoldLast: Byte = 0x02
   val FlagClipped: Byte = 0x04
-  private val AmcCarrierIncrementQ32: Int = 268435456 // 2^32/16, hardcoded (:115)
   private val TwoPowMinus16: Float = 1.52587890625e-5f
 
   private def lutAt(idx: Int): (Float, Float) =
@@ -71,7 +70,7 @@ object HotLoopStep {
           val (re, im) = lutAt(idx)
           (st.copy(phaseAccumulatorQ32 = acc), out(re, im, norm, flag))
         case "amc" =>
-          val acc = st.phaseAccumulatorQ32 + AmcCarrierIncrementQ32
+          val acc = st.phaseAccumulatorQ32 + cfg.amcIncrementQ32.toInt // wraps mod 2^32
           val idx = ((acc >>> 22) & 0x3ff)
           val (re, im) = lutAt(idx)
           (st.copy(phaseAccumulatorQ32 = acc), out(ratio * re, ratio * im, norm, flag))
@@ -173,6 +172,14 @@ object HotLoopStep {
     }
     (s, out.result())
   }
+
+  /** One micro-batch of a stateful stream: sorts `rows` by tick_idx and
+    * folds them from the stored state (a fresh state for a new key). The
+    * body shared by every streaming hot-loop entry.
+    */
+  def foldBatch(prev: Option[HotLoopState], rows: Iterator[TickIn],
+      cfg: SignalConfig): (HotLoopState, Seq[TickOut]) =
+    fold(prev.getOrElse(HotLoopState()), rows.toSeq.sortBy(_.tick_idx), cfg)
 
   /** Fold a whole ordered batch (used by tests and small batch jobs). */
   def run(ticks: Seq[TickIn], cfg: SignalConfig): Seq[TickOut] =

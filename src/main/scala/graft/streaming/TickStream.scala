@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
@@ -43,8 +42,7 @@ object TickStream {
       .flatMapGroupsWithState[HotLoopState, TickOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (_, it, state: GroupState[HotLoopState]) =>
-          val (s, outs) = HotLoopStep.fold(state.getOption.getOrElse(HotLoopState()),
-            it.toSeq.sortBy(_.tick_idx), cfg)
+          val (s, outs) = HotLoopStep.foldBatch(state.getOption, it, cfg)
           state.update(s)
           outs.iterator
       }
@@ -67,8 +65,7 @@ object TickStream {
       .flatMapGroupsWithState[HotLoopState, (String, TickOut)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (sym, it, state: GroupState[HotLoopState]) =>
-          val (s, outs) = HotLoopStep.fold(state.getOption.getOrElse(HotLoopState()),
-            it.map(_._2).toSeq.sortBy(_.tick_idx), cfg)
+          val (s, outs) = HotLoopStep.foldBatch(state.getOption, it.map(_._2), cfg)
           state.update(s)
           outs.iterator.map(o => (sym, o))
       }
@@ -96,8 +93,8 @@ object TickStream {
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[(String, TickIn)],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(String, TickOut)] = {
-      val (s, outs) = HotLoopStep.fold(if (st.exists()) st.get() else HotLoopState(),
-        rows.map(_._2).toSeq.sortBy(_.tick_idx), cfg)
+      val (s, outs) = HotLoopStep.foldBatch(Option.when(st.exists())(st.get()),
+        rows.map(_._2), cfg)
       st.update(s)
       outs.iterator.map(o => (key, o))
     }
@@ -249,15 +246,16 @@ object TickStream {
   case object Analytics extends ConsumerType  // drop-on-full
 
   /** Per-consumer delivery stats (reference: TripleSplitSystem.jl:272-305).
-    * The queue exists only for local (reference-emulation) delivery.
+    * Rows reach a consumer only through the fan-out's `partitionSink`.
     */
   final class ConsumerStats(val name: String, val kind: ConsumerType, val bufferSize: Int) {
     val messagesSent = new AtomicLong
     val messagesDropped = new AtomicLong
-    val queue = new ConcurrentLinkedQueue[TickOut]()
-    /** Current buffer fill consulted by the drop policy. Local delivery
-      * fills `queue`; an external sink can override via [[fillProbe]]. */
-    @volatile var fillProbe: () => Int = () => queue.size
+    /** Buffer fill read by the drop policy once per micro-batch (room =
+      * `bufferSize - fillProbe()`). A sink that has returned has consumed
+      * its share, hence the default 0; an asynchronous sink that queues
+      * rows reports its backlog here. */
+    @volatile var fillProbe: () => Int = () => 0
   }
 
   /** T34: consumer registry with subscribe/unsubscribe (reference:
@@ -311,6 +309,8 @@ object TickStream {
     * ANALYTICS consumers drop (and count) rows beyond their buffer room.
     * One `foreachBatch` fan-out so all consumers observe the same
     * micro-batch — mirroring broadcast_to_all! (TripleSplitSystem.jl:172-259).
+    * Every consumer is served through `partitionSink`, called with the
+    * consumer's name; with no sink the fan-out only counts.
     *
     * Each micro-batch is ONE Spark job: the job that runs the stateful
     * stage. Before it starts, the driver fixes each consumer's room —
@@ -319,24 +319,30 @@ object TickStream {
     * hands them to `partitionSink` for every Priority consumer (the
     * unbounded stream never leaves the executors), and returns its row
     * count plus its `keep` smallest rows by `tick_idx`, `keep` being the
-    * largest room among the consumers served from the driver. A dropping
-    * consumer's share is the batch's `sent = min(n, room)` smallest rows,
-    * which always lie in the union of each partition's `sent` smallest;
-    * the driver takes them from the merged candidates and calls
+    * largest room among the dropping consumers. A dropping consumer's
+    * share is the batch's `sent = min(n, room)` smallest rows, which
+    * always lie in the union of each partition's `sent` smallest; the
+    * driver takes them from the merged candidates and calls
     * `partitionSink` with them (at most `room` rows, in `tick_idx` order).
     * The cut is by rank, so delivery is exact even when `tick_idx` has
-    * gaps (upstream drops, files split across triggers). `localDeliver`
-    * instead brings the whole batch to the driver and fills each
-    * consumer's queue with its first `sent` rows — the reference-emulation
-    * mode used by parity tests; never use it at scale.
+    * gaps (upstream drops, files split across triggers).
     */
   def broadcastTo(
       enriched: Dataset[TickOut],
       registry: ConsumerRegistry,
       checkpoint: String,
       partitionSink: Option[(String, Iterator[TickOut]) => Unit] = None,
-      localDeliver: Boolean = false,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
+    fanOut(enriched, registry, checkpoint, partitionSink, trigger)(() => ())
+
+  /** [[broadcastTo]], running `afterBatch` at the end of each micro-batch
+    * body, once the batch's counters are recorded. */
+  private def fanOut(
+      enriched: Dataset[TickOut],
+      registry: ConsumerRegistry,
+      checkpoint: String,
+      partitionSink: Option[(String, Iterator[TickOut]) => Unit],
+      trigger: Trigger)(afterBatch: () => Unit): StreamingQuery =
     enriched.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -348,17 +354,14 @@ object TickStream {
           if (c.kind == Priority) Long.MaxValue
           else math.max(0L, (c.bufferSize - c.fillProbe()).toLong)
         }
-        val sink = if (localDeliver) None else partitionSink
         val priorityNames = consumers.filter(_.kind == Priority).map(_.name)
-        // Consumers served from the merged candidates on the driver: all of
-        // them in localDeliver mode, the dropping ones behind a sink.
-        val fromDriver = consumers.map(c =>
-          localDeliver || (sink.isDefined && c.kind != Priority))
+        // Dropping consumers are served on the driver from the merged candidates.
+        val fromDriver = consumers.map(c => partitionSink.isDefined && c.kind != Priority)
         val keep = rooms.zip(fromDriver).collect { case (r, true) => r }
           .maxOption.fold(0)(r => math.min(r, Int.MaxValue.toLong).toInt)
         val parts = batch.sparkSession.sparkContext.runJob(batch.rdd, (it: Iterator[TickOut]) => {
           val rows = it.toArray
-          sink.foreach(s => priorityNames.foreach(name => s(name, rows.iterator)))
+          partitionSink.foreach(s => priorityNames.foreach(name => s(name, rows.iterator)))
           (rows.length.toLong,
             if (keep == 0) Array.empty[TickOut] else rows.sortBy(_.tick_idx).take(keep))
         })
@@ -369,17 +372,15 @@ object TickStream {
           val candidates = parts.flatMap(_._2).sortBy(_.tick_idx)
           consumers.lazyZip(rooms).lazyZip(fromDriver).foreach { (c, room, driverSide) =>
             val sent = math.min(n, room)
-            if (driverSide && sent > 0) {
-              val share = candidates.iterator.take(sent.toInt)
-              if (localDeliver) share.foreach(c.queue.add)
-              else sink.foreach(_(c.name, share))
-            }
+            if (driverSide && sent > 0)
+              partitionSink.foreach(_(c.name, candidates.iterator.take(sent.toInt)))
             c.messagesSent.addAndGet(sent)
             c.messagesDropped.addAndGet(n - sent)
           }
           registry.successfulBroadcasts.incrementAndGet()
         }
         registry.recordBatchMs(System.currentTimeMillis() - batchT0)
+        afterBatch()
       }
       .start()
 
@@ -394,12 +395,27 @@ object TickStream {
       if (wallMs <= 0) 0.0 else ticksProcessed * 1000.0 / wallMs
   }
 
+  /** Stats from the registry's exact foreachBatch accounting, not
+    * `query.recentProgress` (a bounded ring buffer), with the wall clock
+    * running from `startedAtMs`. */
+  private def statsOf(registry: ConsumerRegistry, startedAtMs: Long): PipelineStats = {
+    val batches = registry.totalBroadcasts.get()
+    PipelineStats(
+      ticksProcessed = registry.rowsBroadcast.get(),
+      batches = batches,
+      wallMs = System.currentTimeMillis() - startedAtMs,
+      batchMsMin = if (batches == 0) 0L else registry.batchMsMin.get(),
+      batchMsMax = if (batches == 0) 0L else registry.batchMsMax.get(),
+      batchMsAvg = if (batches == 0) 0.0
+                   else registry.batchMsSum.get().toDouble / batches)
+  }
+
   /** T37/T38/T39: managed pipeline — start the fan-out under a metrics
     * clock, report progress, expose stats, stop cooperatively.
     *
     * Reference mapping: run_pipeline! with metrics + progress every N
     * ticks (PipelineOrchestrator.jl:340-432, per-tick timing :116-186),
-    * stop_pipeline! (:206-213) — here the progress callback fires per
+    * stop_pipeline! (:206-213) — here progress is reported from the
     * micro-batch (the Spark unit of work) and `stop()` drains the
     * in-flight batch before terminating, then emits the final snapshot.
     */
@@ -408,19 +424,7 @@ object TickStream {
       registry: ConsumerRegistry,
       startedAtMs: Long,
       onComplete: PipelineStats => Unit) {
-    def stats: PipelineStats = {
-      // Counters come from the registry's exact foreachBatch accounting,
-      // not query.recentProgress (which is a bounded ring buffer).
-      val batches = registry.totalBroadcasts.get()
-      PipelineStats(
-        ticksProcessed = registry.rowsBroadcast.get(),
-        batches = batches,
-        wallMs = System.currentTimeMillis() - startedAtMs,
-        batchMsMin = if (batches == 0) 0L else registry.batchMsMin.get(),
-        batchMsMax = if (batches == 0) 0L else registry.batchMsMax.get(),
-        batchMsAvg = if (batches == 0) 0.0
-                     else registry.batchMsSum.get().toDouble / batches)
-    }
+    def stats: PipelineStats = statsOf(registry, startedAtMs)
     def managerStats: Map[String, Long] = registry.managerStats
     /** Cooperative stop: finish the running micro-batch, then terminate
       * and fire the completion callback with final stats. */
@@ -435,11 +439,14 @@ object TickStream {
   }
 
   /** Start a managed fan-out pipeline (T37/T38): trigger cadence from
-    * flow control (T10), progress callback on a rows-crossed cadence
-    * (the reference logs every 10k ticks,
-    * PipelineOrchestrator.jl:366-374 — here checked at each micro-batch,
-    * the Spark unit of progress; `progressEveryRows <= 0` reports every
-    * batch), completion hook.
+    * flow control (T10), delivery through [[broadcastTo]], completion
+    * hook. `onProgress` runs synchronously at the end of a micro-batch
+    * body, inline as in the reference's processing loop
+    * (PipelineOrchestrator.jl:366-374, which logs every 10k ticks): it
+    * fires when the rows processed so far cross a multiple of
+    * `progressEveryRows`, or after every batch when that is `<= 0`. A
+    * slow callback delays the next batch, and one that throws fails the
+    * query.
     */
   def runManaged(
       enriched: Dataset[TickOut],
@@ -447,64 +454,20 @@ object TickStream {
       checkpoint: String,
       flow: FlowControlConfig = FlowControlConfig(),
       partitionSink: Option[(String, Iterator[TickOut]) => Unit] = None,
-      localDeliver: Boolean = false,
       onProgress: PipelineStats => Unit = _ => (),
       onComplete: PipelineStats => Unit = _ => (),
       progressEveryRows: Long = 0L): ManagedPipeline = {
     val t0 = System.currentTimeMillis()
-    // The listener must be registered BEFORE the query starts or a fast
-    // first micro-batch can complete unobserved; since the query id only
-    // exists after start, listener threads gate on a latch until it is
-    // assigned (the listener bus runs on its own thread, so awaiting
-    // there cannot deadlock this one).
-    val idSet = new java.util.concurrent.CountDownLatch(1)
-    @volatile var managed: ManagedPipeline = null
-    @volatile var aborted = false
-    val lastReportedRows = new AtomicLong(0L)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        // Time-bounded: if start() failed, the latch is counted down in
-        // the catch below, but never block the SHARED listener bus
-        // indefinitely on an unforeseen path either.
-        idSet.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        if (managed != null && e.progress.id == managed.query.id) {
-          val s = managed.stats
-          val prev = lastReportedRows.get()
-          if (progressEveryRows <= 0L ||
-              s.ticksProcessed / progressEveryRows > prev / progressEveryRows) {
-            lastReportedRows.set(s.ticksProcessed)
-            onProgress(s)
-          }
-        }
-      }
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = {
-        idSet.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        // Self-remove only for OUR query's termination or an explicitly
-        // failed start (`aborted`). Inferring the failed-start case from
-        // `managed == null` after a timed-out await would detach this
-        // listener whenever startup legitimately exceeds 30s (slow
-        // checkpoint dir) and an UNRELATED query on the shared session
-        // terminates in that window — silently killing onProgress.
-        if (aborted || (managed != null && e.id == managed.query.id))
-          enriched.sparkSession.streams.removeListener(this)
+    var lastReportedRows = 0L // batch bodies run one at a time, on the query's thread
+    val query = fanOut(enriched, registry, checkpoint, partitionSink, triggerFor(flow)) { () =>
+      val s = statsOf(registry, t0)
+      if (progressEveryRows <= 0L ||
+          s.ticksProcessed / progressEveryRows > lastReportedRows / progressEveryRows) {
+        lastReportedRows = s.ticksProcessed
+        onProgress(s)
       }
     }
-    enriched.sparkSession.streams.addListener(listener)
-    val query =
-      try broadcastTo(enriched, registry, checkpoint, partitionSink,
-        localDeliver, triggerFor(flow))
-      catch { case e: Throwable =>
-        // A failed start must not leave the listener gating the shared
-        // bus thread on a latch that will never count down.
-        aborted = true
-        enriched.sparkSession.streams.removeListener(listener)
-        idSet.countDown()
-        throw e
-      }
-    managed = new ManagedPipeline(query, registry, t0, onComplete)
-    idSet.countDown()
-    managed
+    new ManagedPipeline(query, registry, t0, onComplete)
   }
 
   /** Event-time windowed aggregation with watermark over the events table

@@ -24,6 +24,17 @@ class TickStreamSpec extends SparkSpec {
       if (i == 1) 0 else rnd.nextInt(41) - 20))
   }
 
+  /** A `partitionSink` that records every delivered row under its
+    * consumer's name, and a reader of what a consumer got. The rows go to
+    * an accumulator: the sink is serialized into tasks even under
+    * local[*], so a captured collection would be filled on a copy.
+    */
+  private def recordingSink(): (String => Seq[TickOut], (String, Iterator[TickOut]) => Unit) = {
+    val rows = spark.sparkContext.collectionAccumulator[(String, TickOut)]("delivered")
+    (name => rows.value.asScala.collect { case (`name`, t) => t }.toSeq,
+      (name, it) => it.foreach(t => rows.add((name, t))))
+  }
+
   test("streaming hot loop equals the sequential fold across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val ticks = mkTicks(600)
@@ -204,17 +215,22 @@ class TickStreamSpec extends SparkSpec {
 
   test("streaming f32 hot loop tracks the batch double pipeline to 1e-5") {
     val ticks = mkTicks(500)
-    val seq = HotLoopStep.run(ticks, cfg)
-    val batch = graft.operators.TickPipeline.hotLoop(
-      ticks.toDF(), cfg)
-      .select($"tick_idx", $"signal_re", $"signal_im", $"normalization", $"status_flag")
-      .as[(Long, Double, Double, Double, Int)].collect().sortBy(_._1)
-    seq.zip(batch).foreach { case (f32, (idx, re, im, norm, flag)) =>
-      assert(f32.tick_idx == idx)
-      assert(f32.status_flag.toInt == flag, s"flag at $idx")
-      assert(math.abs(f32.normalization - norm) <= 1e-4 * math.abs(norm) + 1e-6, s"norm at $idx")
-      assert(math.abs(f32.signal_re - re) <= 1e-4 * math.abs(re) + 1e-5, s"re at $idx")
-      assert(math.abs(f32.signal_im - im) <= 1e-4 * math.abs(im) + 1e-5, s"im at $idx")
+    val amc8 = cfg.copy(encoderType = "amc", amcCarrierPeriod = 8f, honorAmcCarrierPeriod = true)
+    Seq(cfg, amc8).foreach { c =>
+      val seq = HotLoopStep.run(ticks, c)
+      val batch = graft.operators.TickPipeline.hotLoop(
+        ticks.toDF(), c)
+        .select($"tick_idx", $"signal_re", $"signal_im", $"normalization", $"status_flag")
+        .as[(Long, Double, Double, Double, Int)].collect().sortBy(_._1)
+      assert(seq.size == batch.length)
+      seq.zip(batch).foreach { case (f32, (idx, re, im, norm, flag)) =>
+        val at = s"${c.encoderType} at $idx"
+        assert(f32.tick_idx == idx)
+        assert(f32.status_flag.toInt == flag, s"flag $at")
+        assert(math.abs(f32.normalization - norm) <= 1e-4 * math.abs(norm) + 1e-6, s"norm $at")
+        assert(math.abs(f32.signal_re - re) <= 1e-4 * math.abs(re) + 1e-5, s"re $at")
+        assert(math.abs(f32.signal_im - im) <= 1e-4 * math.abs(im) + 1e-5, s"im $at")
+      }
     }
   }
 
@@ -227,16 +243,17 @@ class TickStreamSpec extends SparkSpec {
     val prio = registry.subscribe("prio", TickStream.Priority, 64)
     val mon = registry.subscribe("mon", TickStream.Monitoring, 100)
     val ckpt = Files.createTempDirectory("ckpt2").toString
-    val query = TickStream.broadcastTo(enriched, registry, ckpt, localDeliver = true)
+    val (delivered, sink) = recordingSink()
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
     try {
       input.addData(ticks: _*)
       query.processAllAvailable()
       assert(prio.messagesSent.get() == 300 && prio.messagesDropped.get() == 0)
       assert(mon.messagesSent.get() == 100)
       assert(mon.messagesDropped.get() == 200) // buffer 100, drop the rest
-      assert(prio.queue.size == 300 && mon.queue.size == 100)
+      assert(delivered("prio").size == 300 && delivered("mon").size == 100)
       // the dropped share is the TAIL: the kept rows are the first 100
-      assert(mon.queue.asScala.map(_.tick_idx).max == 100)
+      assert(delivered("mon").map(_.tick_idx).max == 100)
       assert(registry.managerStats("total_broadcasts") >= 1)
       assert(registry.managerStats("successful_broadcasts") >= 1)
     } finally query.stop()
@@ -252,13 +269,14 @@ class TickStreamSpec extends SparkSpec {
     val registry = new TickStream.ConsumerRegistry
     val mon = registry.subscribe("mon", TickStream.Monitoring, 100)
     val ckpt = Files.createTempDirectory("ckpt6").toString
-    val query = TickStream.broadcastTo(enriched, registry, ckpt, localDeliver = true)
+    val (delivered, sink) = recordingSink()
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
     try {
       input.addData(ticks: _*)
       query.processAllAvailable()
       assert(mon.messagesSent.get() == 100 && mon.messagesDropped.get() == 200)
       // exactly the 100 smallest ids survive: 1..298 step 3
-      val got = mon.queue.asScala.map(_.tick_idx).toSeq.sorted
+      val got = delivered("mon").map(_.tick_idx).sorted
       assert(got.size == 100 && got == (1L to 298L by 3L))
     } finally query.stop()
   }
@@ -271,7 +289,8 @@ class TickStreamSpec extends SparkSpec {
     val input = MemoryStream[TickIn]
     val enriched = TickStream.hotLoopStream(input.toDS(), cfg)
     val ckpt = Files.createTempDirectory("ckpt3").toString
-    val query = TickStream.broadcastTo(enriched, registry, ckpt, localDeliver = true)
+    val (_, sink) = recordingSink()
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
     try {
       input.addData(mkTicks(50): _*); query.processAllAvailable()
       assert(registry.get("a").get.messagesSent.get() == 50)
@@ -298,9 +317,11 @@ class TickStreamSpec extends SparkSpec {
     // partition-side delivery: count rows per consumer via accumulators
     val sentPrio = spark.sparkContext.longAccumulator("sent_prio")
     val sentMon = spark.sparkContext.longAccumulator("sent_mon")
+    val prioOnDriver = spark.sparkContext.longAccumulator("prio_on_driver")
     val sink: (String, Iterator[TickOut]) => Unit = { (name, it) =>
       val n = it.size.toLong
       if (name == "prio") sentPrio.add(n) else sentMon.add(n)
+      if (name == "prio" && org.apache.spark.TaskContext.get() == null) prioOnDriver.add(1L)
     }
     val ckpt = Files.createTempDirectory("ckpt4").toString
     val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
@@ -310,7 +331,7 @@ class TickStreamSpec extends SparkSpec {
       assert(prio.messagesSent.get() == 300 && sentPrio.value == 300L)
       assert(mon.messagesSent.get() == 120 && sentMon.value == 120L)
       assert(mon.messagesDropped.get() == 180)
-      assert(prio.queue.isEmpty && mon.queue.isEmpty) // nothing on the driver
+      assert(prioOnDriver.value == 0L) // the Priority stream never reaches the driver
     } finally query.stop()
   }
 
@@ -400,15 +421,17 @@ class TickStreamSpec extends SparkSpec {
     registry.subscribe("prio", TickStream.Priority, 64)
     val ckpt = Files.createTempDirectory("ckpt5").toString
     @volatile var completed: Option[TickStream.PipelineStats] = None
+    val (delivered, sink) = recordingSink()
     val managed = TickStream.runManaged(enriched, registry, ckpt,
       flow = graft.config.FlowControlConfig(delayMs = 0.0),
-      localDeliver = true,
+      partitionSink = Some(sink),
       onComplete = s => completed = Some(s))
     try {
       input.addData(mkTicks(200): _*)
       managed.query.processAllAvailable()
       val s = managed.stats
       assert(s.ticksProcessed == 200 && s.batches >= 1 && s.wallMs >= 0)
+      assert(delivered("prio").size == 200)
       assert(managed.managerStats("successful_broadcasts") >= 1)
       // T38 batch-latency granularity: min/max/avg populated once a
       // batch has completed, and mutually consistent.
@@ -420,6 +443,32 @@ class TickStreamSpec extends SparkSpec {
       assert(completed.exists(_.ticksProcessed == 200))
       assert(!managed.query.isActive)
     }
+  }
+
+  test("managed pipeline reports progress from the batch body, with no query listener") {
+    implicit val sqlCtx = spark.sqlContext
+    val ticks = mkTicks(320)
+    // Batches of 60, 60 and 200 rows; returns ticksProcessed at each report.
+    def reports(progressEveryRows: Long): Seq[Long] = {
+      val input = MemoryStream[TickIn]
+      val registry = new TickStream.ConsumerRegistry
+      registry.subscribe("prio", TickStream.Priority, 64)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val listeners = spark.streams.listListeners().length
+      val managed = TickStream.runManaged(TickStream.hotLoopStream(input.toDS(), cfg), registry,
+        Files.createTempDirectory("ckpt_progress").toString,
+        onProgress = s => seen.add(s.ticksProcessed), progressEveryRows = progressEveryRows)
+      try {
+        assert(spark.streams.listListeners().length == listeners)
+        Seq(ticks.take(60), ticks.slice(60, 120), ticks.drop(120)).foreach { b =>
+          input.addData(b: _*); managed.query.processAllAvailable()
+        }
+        assert(managed.query.recentProgress.count(_.numInputRows > 0) == 3)
+        seen.asScala.toSeq
+      } finally managed.stop()
+    }
+    assert(reports(100L) == Seq(120L, 320L))
+    assert(reports(0L) == Seq(60L, 120L, 320L)) // once per data batch
   }
 
   test("T10 flow-control delay maps to the processing-time trigger") {
@@ -501,13 +550,16 @@ class TickStreamSpec extends SparkSpec {
     val prio = registry.subscribe("prio", TickStream.Priority, 64)
     val mon = registry.subscribe("mon", TickStream.Monitoring, 100)
     val ckpt = Files.createTempDirectory("ckpt7").toString
-    val query = TickStream.broadcastTo(enriched, registry, ckpt, localDeliver = true)
+    val (delivered, sink) = recordingSink()
+    // The monitoring consumer never drains: its fill is all it was handed.
+    mon.fillProbe = () => delivered("mon").size
+    val query = TickStream.broadcastTo(enriched, registry, ckpt, partitionSink = Some(sink))
     try {
       input.addData(b1: _*); query.processAllAvailable()
       input.addData(replayed ++ b2: _*); query.processAllAvailable()
       // Dedup: exactly one delivery per distinct tick despite the replay.
       assert(prio.messagesSent.get() == 270 && prio.messagesDropped.get() == 0)
-      val got = prio.queue.asScala.toSeq
+      val got = delivered("prio")
       assert(got.map(_.tick_idx).distinct.size == 270)
       // Hot-loop state parity: the replayed ticks must NOT have re-folded —
       // every emitted row equals the clean single-run fold per symbol.
