@@ -85,7 +85,9 @@ object Graft {
   /** The full tick hot loop — validation, hold-last, jump guard,
     * winsorization, adaptive Q16 normalization and the configured
     * encoder (derivative / hexad16 / cpm / amc) — as one distributed
-    * scan (reference: process_tick_signal! and friends).
+    * scan with the values of [[graft.operators.HotLoopKernel]], the same
+    * Float32 arithmetic as [[hotLoopStream]] (reference:
+    * process_tick_signal! and friends).
     */
   def hotLoop(ticks: DataFrame, cfg: SignalConfig): DataFrame =
     TickPipeline.hotLoopChunked(ticks, cfg)

@@ -66,10 +66,6 @@ object TickFunctions {
   lazy val cpmLutIm: Array[Double] =
     (0 until 1024).map(k => math.sin((2 * math.Pi * k / 1024).toFloat.toDouble).toFloat.toDouble).toArray
 
-  /** element_at over a literal double array (single folded Literal). */
-  def lutLookup(lut: Array[Double], idx1Based: Column): Column =
-    element_at(typedLit(lut.toSeq), idx1Based.cast("int"))
-
   /** Format a double so it round-trips bit-exactly through SQL text.
     * Used to embed identical literals in Spark plans and oracle SQL.
     */
@@ -80,9 +76,4 @@ object TickFunctions {
 
   /** SQL list literal for a LUT, shared with the DuckDB oracle. */
   def sqlArray(lut: Array[Double]): String = lut.map(dlit).mkString("[", ", ", "]")
-
-  /** Preloaded Q16 inverse-normalization: round(Float32(65536)/Float32(8.67))
-    * (reference: src/TickHotLoopF32.jl:107).
-    */
-  val invNormPreloadQ16: Long = math.round(65536.0f / 8.67f).toLong
 }

@@ -1,41 +1,27 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.config.{BarConfig, SignalConfig}
 import graft.functions.TickFunctions
 
-/** The tick-processing pipeline re-expressed as declarative Spark
-  * dataflow. Every reference "stateful" computation is order-indexed and
-  * algebraically cumulative (SURVEY.md §7.0), so the whole hot loop
-  * (reference: src/TickHotLoopF32.jl:287-437) lowers to window functions
-  * over `tick_idx` — no mutable state, no mapGroupsWithState.
+/** The tick-processing pipeline re-expressed as Spark dataflow. Every
+  * reference "stateful" computation is order-indexed and algebraically
+  * cumulative (SURVEY.md §7.0), so each stage lowers to a two-pass prefix
+  * scan over `tick_idx` ([[Ordered]]/[[Scan]]: partials per chunk, driver
+  * prefix, local finish) — no partition-less window, no
+  * mapGroupsWithState.
   *
-  * Numerics: this module computes in Double with explicit half-up
-  * rounding (`floor(x+0.5)`) so results are bit-reproducible across
-  * engines (the DuckDB oracle mirrors the same expressions). The
-  * reference computes in Float32 with ties-to-even rounding; the integer
-  * paths (clipping, Q16 fixed-point, phase accumulators) are exact either
-  * way, the float paths agree to ~1e-6 relative.
-  *
-  * Scale note: `Window.orderBy(tick_idx)` with no partition serializes
-  * onto one partition — fine for correctness tests, fatal at 100 TB. The
-  * scalable formulation of the same semantics is the two-pass prefix scan
-  * in [[Ordered]]/[[Scan]] (partials per chunk + driver prefix + local
-  * finish); see `hotLoopChunked` docs below.
+  * Numerics: the hot loop's values are those of [[HotLoopKernel]], the
+  * one specification shared with the streaming fold and the DuckDB
+  * oracle: Float32 arithmetic with the Q16 reciprocal rounded
+  * ties-to-even, as in the reference (src/TickHotLoopF32.jl:287-437).
+  * Output columns are DOUBLE; each holds the Float32 result, widened. The
+  * bar processor computes in Double with explicit half-up rounding
+  * (`floor(x+0.5)`), mirrored expression-for-expression by the oracle.
   */
 object TickPipeline {
-
-  import TickFunctions.{cpmLutIm, cpmLutRe, hexad16Im, hexad16Re}
-
-  /** Preloaded Q16 reciprocal before the first completed 144-tick bar
-    * (reference: src/TickHotLoopF32.jl:107).
-    */
-  val InvNormPreload: Long = math.rint(65536.0f / 8.67f).toLong // 7559
-  val TwoPowMinus16: Double = 1.52587890625e-5
-  val TicksPerStatsBar = 144 // hardcoded, independent of bar-processor config (TickHotLoopF32.jl:50)
 
   // ------------------------------------------------------------------ T1/T2
   /** Batch text tick source: read a `;`-delimited tick file, skip blank
@@ -74,172 +60,14 @@ object TickPipeline {
 
   // ------------------------------------------------------------------ T7-T9
   /** Volume expansion + line-level lag delta + global tick index
-    * (reference: src/VolumeExpansion.jl:175-214). Input needs
+    * (reference: src/VolumeExpansion.jl:175-214) in one distributed
+    * [[Scan]] pass (state = last price + running volume sum). Input needs
     * (line_idx, ts_str, last, volume); extra columns pass through.
     *
     * Deltas are computed across *lines* before expansion; replica 1
     * carries the real delta, replicas 2..v carry 0; the stream's very
     * first tick carries 0. `tick_idx` = prefix-sum of volumes, dense and
     * 1-based over the expanded stream.
-    */
-  def expandVolume(lines: DataFrame): DataFrame = {
-    val wLine = Window.orderBy("line_idx")
-    val wCum = wLine.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lines
-      .withColumn("line_delta",
-        coalesce(col("last") - lag("last", 1).over(wLine), lit(0)))
-      .withColumn("cum_vol", sum("volume").over(wCum))
-      .withColumn("replica_idx",
-        explode(when(col("volume") >= 1, sequence(lit(1), col("volume")))
-          .otherwise(array().cast("array<int>"))))
-      .withColumn("tick_idx", col("cum_vol") - col("volume") + col("replica_idx"))
-      .withColumn("timestamp", TickFunctions.encodeTimestamp(col("ts_str")))
-      .withColumn("raw_price", col("last"))
-      .withColumn("price_delta",
-        when(col("replica_idx") === 1, col("line_delta")).otherwise(lit(0)))
-      .drop("cum_vol")
-  }
-
-  // ----------------------------------------------------------------- T11-T24
-  /** The hot loop: validation/hold-last, jump guard, winsorization,
-    * 144-tick bar statistics, cumulative-mean normalization, Q16
-    * fixed-point ratio, and one of four encoders — all as window
-    * expressions over `tick_idx`.
-    *
-    * Input: (tick_idx, raw_price, price_delta [, ...passthrough]).
-    * Output adds: signal_re, signal_im, normalization, status_flag.
-    */
-  def hotLoop(ticks: DataFrame, cfg: SignalConfig): DataFrame = {
-    val wOrd = Window.orderBy("tick_idx")
-    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-
-    val minP = lit(cfg.minPrice); val maxP = lit(cfg.maxPrice)
-    val maxJ = lit(cfg.maxJump); val winz = lit(cfg.winsorizeDeltaThreshold)
-
-    // Stage 1: validation classes. `first_valid` is the cumulative min of
-    // valid tick indices; four mutually exclusive row classes fall out
-    // (reference: TickHotLoopF32.jl:302-343).
-    val s1 = ticks
-      .withColumn("valid", col("raw_price").between(minP, maxP))
-      .withColumn("first_valid",
-        min(when(col("valid"), col("tick_idx"))).over(wCum))
-    val s2 = s1
-      .withColumn("is_pre", !col("valid") && col("first_valid").isNull)
-      .withColumn("is_hold", !col("valid") && col("first_valid").isNotNull)
-      .withColumn("is_elig", col("valid") && col("tick_idx") =!= col("first_valid"))
-      // Stage 2: jump guard then winsorize (order matters — reference
-      // clips before bar statistics, TickHotLoopF32.jl:347-359).
-      .withColumn("clip1", abs(col("price_delta")) > maxJ)
-      .withColumn("d1", when(col("clip1"),
-        when(col("price_delta") > 0, maxJ).otherwise(-maxJ)).otherwise(col("price_delta")))
-      .withColumn("clip2", abs(col("d1")) > winz)
-      .withColumn("d", when(col("clip2"),
-        when(col("d1") > 0, winz).otherwise(-winz)).otherwise(col("d1")))
-      .withColumn("flag_clip", col("clip1") || col("clip2"))
-      // Stage 3: position among eligible ticks → 144-tick stats bars.
-      .withColumn("elig_rn",
-        sum(when(col("is_elig"), 1L).otherwise(0L)).over(wCum))
-    val s3 = s2
-      .withColumn("bar_id",
-        when(col("is_elig"), floor((col("elig_rn") - 1) / lit(144.0)).cast("long")))
-      .withColumn("bar_pos",
-        when(col("is_elig"), col("elig_rn") - floor((col("elig_rn") - 1) / lit(144.0)).cast("long") * 144))
-      .withColumn("is_boundary", col("is_elig") && col("bar_pos") === 144)
-    // Stage 4: per-bar delta min/max (full-partition frame).
-    val wBar = Window.partitionBy("bar_id")
-    val s4 = s3
-      .withColumn("bar_min", min(when(col("is_elig"), col("d"))).over(wBar))
-      .withColumn("bar_max", max(when(col("is_elig"), col("d"))).over(wBar))
-    // Stage 5: completed-bar cumulative sums. A bar's (min,max) enters the
-    // running statistics exactly at its boundary tick, *before* that
-    // tick's own normalization (TickHotLoopF32.jl:383-405), which the
-    // current-row-inclusive frame reproduces.
-    val s5 = s4
-      .withColumn("k_bars",
-        coalesce(sum(when(col("is_boundary"), 1L)).over(wCum), lit(0L)))
-      .withColumn("sum_min",
-        coalesce(sum(when(col("is_boundary"), col("bar_min"))).over(wCum), lit(0L)))
-      .withColumn("sum_max",
-        coalesce(sum(when(col("is_boundary"), col("bar_max"))).over(wCum), lit(0L)))
-    // Stage 6: Q16 reciprocal + normalized ratio (TickHotLoopF32.jl:397-414).
-    val norm = greatest(
-      col("sum_max").cast("double") / col("k_bars") -
-        col("sum_min").cast("double") / col("k_bars"), lit(1.0))
-    val s6 = s5
-      .withColumn("inv_q16", when(col("k_bars") === 0, lit(InvNormPreload))
-        .otherwise(floor(lit(65536.0) / norm + 0.5).cast("long")))
-      .withColumn("ratio", when(col("is_elig"),
-        (col("d").cast("long") * col("inv_q16")).cast("double") * lit(TwoPowMinus16))
-        .otherwise(lit(0.0)))
-      .withColumn("normalization", when(col("is_elig"),
-        lit(1.0) / (col("inv_q16").cast("double") * lit(TwoPowMinus16)))
-        .otherwise(lit(1.0)))
-      .withColumn("status_flag",
-        when(col("is_hold"), lit(2))
-          .when(col("is_elig") && col("flag_clip"), lit(4))
-          .otherwise(lit(0)))
-
-    // Stage 7: encoder (plan-time selection — no per-row dispatch,
-    // TickHotLoopF32.jl:416-432).
-    val encoded = cfg.encoderType match {
-      case "derivative" =>
-        val prev = coalesce(
-          last(when(col("is_elig"), col("ratio")), ignoreNulls = true).over(wPrev),
-          lit(0.0))
-        // Hold/first ticks route through the zero-amplitude HEXAD16 path in
-        // the reference — output (0,0); prev_ratio only advances on
-        // eligible ticks (TickHotLoopF32.jl:310-318,257-282).
-        s6.withColumn("signal_re", when(col("is_elig"), col("ratio")).otherwise(lit(0.0)) + 0.0)
-          .withColumn("signal_im", when(col("is_elig"),
-            (col("ratio") - prev) * lit(cfg.tickDerivativeImagScale.toDouble))
-            .otherwise(lit(0.0)) + 0.0)
-      case "hexad16" =>
-        val phase = ((col("tick_idx") - 1) % 16).cast("int")
-        s6.withColumn("signal_re",
-            col("ratio") * TickFunctions.lutLookup(hexad16Re, phase + 1) + 0.0)
-          .withColumn("signal_im",
-            col("ratio") * TickFunctions.lutLookup(hexad16Im, phase + 1) + 0.0)
-      case "cpm" =>
-        val scale = 2.0 * cfg.cpmModulationIndex.toDouble * 2147483648.0
-        val withAcc = s6
-          .withColumn("inc", when(col("is_elig"),
-            floor(col("ratio") * lit(scale) + 0.5).cast("long")).otherwise(lit(0L)))
-          .withColumn("acc", pmod(sum(col("inc")).over(wCum), lit(4294967296L)))
-          .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
-        withAcc
-          .withColumn("signal_re", when(col("is_pre"), lit(0.0))
-            .otherwise(TickFunctions.lutLookup(cpmLutRe, col("lut_idx") + 1)) + 0.0)
-          .withColumn("signal_im", when(col("is_pre"), lit(0.0))
-            .otherwise(TickFunctions.lutLookup(cpmLutIm, col("lut_idx") + 1)) + 0.0)
-      case "amc" =>
-        // Carrier advances by the hardcoded period-16 increment on every
-        // encoder call (holds included); amc_carrier_period config is
-        // deliberately not wired — reference quirk (TickHotLoopF32.jl:115).
-        // honorAmcCarrierPeriod (default-off extension) derives the
-        // increment from the configured period instead.
-        val withAcc = s6
-          .withColumn("enc_rn", sum(when(!col("is_pre"), 1L).otherwise(0L)).over(wCum))
-          .withColumn("acc", pmod(col("enc_rn") * lit(cfg.amcIncrementQ32), lit(4294967296L)))
-          .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
-        withAcc
-          .withColumn("signal_re", when(col("is_pre"), lit(0.0))
-            .otherwise(col("ratio") * TickFunctions.lutLookup(cpmLutRe, col("lut_idx") + 1)) + 0.0)
-          .withColumn("signal_im", when(col("is_pre"), lit(0.0))
-            .otherwise(col("ratio") * TickFunctions.lutLookup(cpmLutIm, col("lut_idx") + 1)) + 0.0)
-      case other => throw new IllegalArgumentException(s"unknown encoder: $other")
-    }
-
-    encoded.drop("valid", "first_valid", "is_pre", "is_hold",
-      "clip1", "d1", "d", "clip2", "flag_clip", "elig_rn", "bar_id", "bar_pos",
-      "is_boundary", "bar_min", "bar_max", "k_bars", "sum_min", "sum_max",
-      "inv_q16", "is_elig", "ratio", "inc", "acc", "lut_idx", "enc_rn")
-  }
-
-  /** Scalable volume expansion: identical semantics to [[expandVolume]]
-    * but with a single distributed [[Scan]] pass (state = last price +
-    * running volume sum) instead of two partition-less windows. Use for
-    * large inputs; `expandVolume` and this agree row-for-row.
     */
   def expandVolumeChunked(lines: DataFrame): DataFrame =
     expandSortedLines(lines.orderBy("line_idx"), emitLineIdx = false)
@@ -289,26 +117,35 @@ object TickPipeline {
     Scan.planFenceOrdered(ticks, Seq("tick_idx"))
   }
 
-  /** Scalable hot loop: identical output to [[hotLoop]] (same expressions
-    * in the same order), with NO partition-less window, NO broadcast of an
-    * unbounded table, and NO extra shuffle. The whole reference recurrence
-    * is strictly causal in `tick_idx`, so it lowers to ONE multi-round
-    * [[Scan.scanRounds]] over the already-ordered stream — the input is
-    * checkpointed once and each round is a lightweight fold job
-    * ([[ScanStates]] holds the monoid algebras):
+  // ----------------------------------------------------------------- T11-T24
+  /** The hot loop: validation/hold-last, jump guard, winsorization,
+    * 144-tick bar statistics, cumulative-mean normalization, Q16
+    * fixed-point ratio and one of four encoders, with the values of
+    * [[HotLoopKernel]]. The recurrence is strictly causal in `tick_idx`,
+    * so it lowers to ONE multi-round [[Scan.scanRounds]] over the ordered
+    * stream: no partition-less window, no broadcast, no extra shuffle. The
+    * input is checkpointed once and each round is a lightweight fold job
+    * that rebuilds part of a row's carry-in ([[ScanStates]] holds the
+    * monoid algebras):
     *
     *   - round 0, [[ScanStates.EligState]]: row classes
     *     (pre/hold/first/eligible) + eligible-row and encoder-call
     *     numbering — the conditional two-branch prefix monoid;
     *   - round 1, [[ScanStates.BarSeg]]: cumulative 144-tick bar
     *     statistics (completed-bar count, sums of per-bar min/max
-    *     winsorized delta, open-bar partial) — reads round 0's running
+    *     clipped delta, open-bar partial) — reads round 0's running
     *     eligible count for globally-aligned bar segmentation;
-    *   - round 2 (derivative/cpm only): encoder chain state — the
-    *     derivative's previous-eligible-ratio (last-wins) or the running
-    *     CPM phase-increment sum, each reading rounds 0-1 to reconstruct
-    *     the row's Q16 ratio. HEXAD16 and AMC are closed-form (phase from
-    *     tick/encoder index) — no third round.
+    *   - round 2 (derivative/cpm only): the encoder's carried state — the
+    *     derivative's previous eligible ratio (last-wins) or the CPM phase
+    *     (a wrapping Int32 sum of phase increments). HEXAD16 carries
+    *     nothing, and the AMC phase is closed-form in round 0's
+    *     encoder-call count.
+    *
+    * The emit pass loads that carry-in into the kernel, which returns the
+    * row's `normalization`, `status_flag`, `signal_re` and `signal_im`.
+    *
+    * Input: (tick_idx BIGINT, raw_price INT, price_delta INT
+    * [, ...passthrough]); output appends those four columns.
     *
     * Ordering contract: the scan asks for its input with
     * `orderBy("tick_idx")` and declares its output ordered by `tick_idx`.
@@ -318,187 +155,100 @@ object TickPipeline {
     */
   def hotLoopChunked(ticks: DataFrame, cfg: SignalConfig): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField}
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
+    import HotLoopKernel.{Amc, Cpm, Derivative, Elig, TicksPerStatsBar}
     import Scan.Round
     import ScanStates._
-    val minP = lit(cfg.minPrice); val maxP = lit(cfg.maxPrice)
-    val maxJ = lit(cfg.maxJump); val winz = lit(cfg.winsorizeDeltaThreshold)
 
-    val s1 = ticks.orderBy("tick_idx")
-      .withColumn("valid", col("raw_price").between(minP, maxP))
-      .withColumn("clip1", abs(col("price_delta")) > maxJ)
-      .withColumn("d1", when(col("clip1"),
-        when(col("price_delta") > 0, maxJ).otherwise(-maxJ)).otherwise(col("price_delta")))
-      .withColumn("clip2", abs(col("d1")) > winz)
-      .withColumn("d", when(col("clip2"),
-        when(col("d1") > 0, winz).otherwise(-winz)).otherwise(col("d1")))
-      .withColumn("flag_clip", col("clip1") || col("clip2"))
+    val sorted = ticks.orderBy("tick_idx")
+    val tIdx = sorted.schema.fieldIndex("tick_idx")
+    val pIdx = sorted.schema.fieldIndex("raw_price")
+    val dIdx = sorted.schema.fieldIndex("price_delta")
+    val kernel = new HotLoopKernel(cfg)
+    val enc = kernel.encoder
 
-    val vIdx = s1.schema.fieldIndex("valid")
-    val dIdx = s1.schema.fieldIndex("d")
-    val preload = InvNormPreload // local copies: keep the scan closures
-    val statsBar = TicksPerStatsBar // free of the enclosing object
-    def invQ16(k: Long, sm: Long, sx: Long): Long =
-      if (k == 0) preload
-      else math.floor(65536.0 /
-        math.max(sx.toDouble / k - sm.toDouble / k, 1.0) + 0.5).toLong
-    // Row-inclusive Q16 reciprocal: a boundary tick's own bar enters the
-    // running stats before that tick's ratio (matches the window
-    // formulation and the reference, TickHotLoopF32.jl:383-405).
-    def invFor(seg: BarSeg, rowElig: Boolean, rowBoundary: Boolean, d: Int): Long = {
+    // Q16 reciprocal of the eligible row numbered `eligRn` with clipped
+    // delta `d`: a boundary tick's own bar enters the running stats
+    // before that tick's ratio (reference: TickHotLoopF32.jl:383-405).
+    def invFor(seg: BarSeg, eligRn: Long, d: Int): Int = {
       val (k, sm, sx, cmn, cmx, open) = barCumulative(seg)
-      if (rowElig && rowBoundary) {
-        val nm = if (open) math.min(cmn, d) else d
-        val nx = if (open) math.max(cmx, d) else d
-        invQ16(k + 1, sm + nm, sx + nx)
-      } else invQ16(k, sm, sx)
+      if (eligRn % TicksPerStatsBar == 0)
+        HotLoopKernel.invQ16(k + 1, sm + (if (open) math.min(cmn, d) else d),
+          sx + (if (open) math.max(cmx, d) else d))
+      else HotLoopKernel.invQ16(k, sm, sx)
     }
-    // The Q16 ratio of an ELIGIBLE row, from the pre-row running states —
-    // double arithmetic in the same shape as the `ratio` column below.
-    def rowRatio(prev: Array[Any], r: InternalRow): Double = {
-      val e = prev(0).asInstanceOf[EligState]
-      val eligRn = e.eligNP + 1
-      val d = r.getInt(dIdx)
-      val inv = invFor(prev(1).asInstanceOf[BarSeg], rowElig = true,
-        eligRn % statsBar == 0, d)
-      (d.toLong * inv).toDouble * TwoPowMinus16
+    def isElig(prev: Array[Any], r: InternalRow): Boolean =
+      prev(0).asInstanceOf[EligState].anyValid && kernel.valid(r.getInt(pIdx))
+    // The ratio of an eligible row, from the running states before it.
+    def rowRatio(prev: Array[Any], r: InternalRow): Float = {
+      val d = kernel.clip(r.getInt(dIdx))
+      HotLoopKernel.ratio(d, invFor(prev(1).asInstanceOf[BarSeg],
+        prev(0).asInstanceOf[EligState].eligNP + 1, d))
     }
 
     val eligRound: Round = new Round {
       def zero: Any = eligZero
-      def lift(prev: Array[Any], r: InternalRow): Any = eligLift(r.getBoolean(vIdx))
+      def lift(prev: Array[Any], r: InternalRow): Any = eligLift(kernel.valid(r.getInt(pIdx)))
       def combine(a: Any, b: Any): Any =
         eligCombine(a.asInstanceOf[EligState], b.asInstanceOf[EligState])
     }
     val barRound: Round = new Round {
       def zero: Any = barZero
-      def lift(prev: Array[Any], r: InternalRow): Any = {
-        val e = prev(0).asInstanceOf[EligState]
-        if (!(r.getBoolean(vIdx) && e.anyValid)) barZero
+      def lift(prev: Array[Any], r: InternalRow): Any =
+        if (!isElig(prev, r)) barZero
         else {
-          val eligRn = e.eligNP + 1
-          barLift(isElig = true, (eligRn - 1) / statsBar,
-            r.getInt(dIdx), eligRn % statsBar == 0)
+          val eligRn = prev(0).asInstanceOf[EligState].eligNP + 1
+          barLift(isElig = true, (eligRn - 1) / TicksPerStatsBar,
+            kernel.clip(r.getInt(dIdx)), eligRn % TicksPerStatsBar == 0)
         }
-      }
       def combine(a: Any, b: Any): Any =
         barCombine(a.asInstanceOf[BarSeg], b.asInstanceOf[BarSeg])
     }
-    val scaleCpm = 2.0 * cfg.cpmModulationIndex.toDouble * 2147483648.0
-    val encRound: Option[Round] = cfg.encoderType match {
-      case "derivative" => Some(new Round { // last eligible ratio, last-wins
-        def zero: Any = (false, 0.0)
-        def lift(prev: Array[Any], r: InternalRow): Any = {
-          val e = prev(0).asInstanceOf[EligState]
-          if (r.getBoolean(vIdx) && e.anyValid) (true, rowRatio(prev, r))
-          else (false, 0.0)
-        }
-        def combine(a: Any, b: Any): Any = {
-          val bb = b.asInstanceOf[(Boolean, Double)]
-          if (bb._1) bb else a
-        }
+    val encRound: Option[Round] = enc match {
+      case Derivative => Some(new Round { // last eligible ratio, last-wins
+        def zero: Any = (false, 0.0f)
+        def lift(prev: Array[Any], r: InternalRow): Any =
+          if (isElig(prev, r)) (true, rowRatio(prev, r)) else (false, 0.0f)
+        def combine(a: Any, b: Any): Any =
+          if (b.asInstanceOf[(Boolean, Float)]._1) b else a
       })
-      case "cpm" => Some(new Round { // running phase-increment sum
-        def zero: Any = 0L
-        def lift(prev: Array[Any], r: InternalRow): Any = {
-          val e = prev(0).asInstanceOf[EligState]
-          if (r.getBoolean(vIdx) && e.anyValid)
-            math.floor(rowRatio(prev, r) * scaleCpm + 0.5).toLong
-          else 0L
-        }
-        def combine(a: Any, b: Any): Any = a.asInstanceOf[Long] + b.asInstanceOf[Long]
+      case Cpm => Some(new Round { // phase: Int32 sum, wrapping mod 2^32
+        def zero: Any = 0
+        def lift(prev: Array[Any], r: InternalRow): Any =
+          if (isElig(prev, r)) kernel.cpmIncrement(rowRatio(prev, r)) else 0
+        def combine(a: Any, b: Any): Any = a.asInstanceOf[Int] + b.asInstanceOf[Int]
       })
-      case "hexad16" | "amc" => None
-      case other => throw new IllegalArgumentException(s"unknown encoder: $other")
+      case _ => None
     }
-    val isDeriv = cfg.encoderType == "derivative"
-    val isCpm = cfg.encoderType == "cpm"
 
-    val appended =
-      Seq(StructField("is_pre", BooleanType, nullable = false),
-        StructField("is_hold", BooleanType, nullable = false),
-        StructField("is_elig", BooleanType, nullable = false),
-        StructField("elig_rn", LongType, nullable = false),
-        StructField("enc_rn", LongType, nullable = false),
-        StructField("inv_q16", LongType, nullable = false)) ++
-      (if (isDeriv) Seq(StructField("prev_ratio", DoubleType, nullable = false))
-       else if (isCpm) Seq(StructField("cum_inc", LongType, nullable = false))
-       else Nil)
-
-    val scanned = Scan.scanRounds(s1, appended,
+    Scan.scanRounds(sorted,
+      Seq(StructField("normalization", DoubleType, nullable = false),
+        StructField("status_flag", IntegerType, nullable = false),
+        StructField("signal_re", DoubleType, nullable = false),
+        StructField("signal_im", DoubleType, nullable = false)),
       IndexedSeq(eligRound, barRound) ++ encRound,
       (st, r) => {
         val e = st(0).asInstanceOf[EligState]
-        val valid = r.getBoolean(vIdx); val seen = e.anyValid
-        val isElig = valid && seen; val isPre = !valid && !seen
-        val eligRn = e.eligNP + (if (isElig) 1L else 0L)
-        val encRn = e.encNP + (if (!isPre) 1L else 0L)
-        val boundary = isElig && eligRn % statsBar == 0
-        val d = r.getInt(dIdx)
-        val inv = invFor(st(1).asInstanceOf[BarSeg], isElig, boundary, d)
-        val base = Seq[Any](isPre, !valid && seen, isElig, eligRn, encRn, inv)
-        if (isDeriv) base :+ st(2).asInstanceOf[(Boolean, Double)]._2
-        else if (isCpm) {
-          val inc = if (isElig)
-            math.floor((d.toLong * inv).toDouble * TwoPowMinus16 * scaleCpm + 0.5).toLong
-          else 0L
-          base :+ (st(2).asInstanceOf[Long] + inc) // inclusive running sum
-        } else base
+        val delta = r.getInt(dIdx)
+        val cls = HotLoopKernel.rowClass(kernel.valid(r.getInt(pIdx)), e.anyValid)
+        val inv =
+          if (cls == Elig) invFor(st(1).asInstanceOf[BarSeg], e.eligNP + 1, kernel.clip(delta))
+          else 0
+        enc match {
+          case Derivative => kernel.prevRatio = st(2).asInstanceOf[(Boolean, Float)]._2
+          case Cpm => kernel.phaseQ32 = st(2).asInstanceOf[Int]
+          case Amc => kernel.phaseQ32 = kernel.amcPhase(e.encNP)
+          case _ =>
+        }
+        kernel.emit(cls, delta, inv, r.getLong(tIdx))
+        Seq[Any](kernel.normalization.toDouble, kernel.flag.toInt,
+          kernel.re.toDouble, kernel.im.toDouble)
       },
       // The scan's input-order requirement, restated as a declared output
       // property: rows stay globally range-ordered by tick_idx, so the
       // declared queries' final `orderBy("tick_idx")` plans to nothing
       // (no Exchange, no Sort) instead of re-sorting the whole stream.
       orderedBy = Seq("tick_idx"))
-
-    val s4 = scanned
-      .withColumn("ratio", when(col("is_elig"),
-        (col("d").cast("long") * col("inv_q16")).cast("double") * lit(TwoPowMinus16))
-        .otherwise(lit(0.0)))
-      .withColumn("normalization", when(col("is_elig"),
-        lit(1.0) / (col("inv_q16").cast("double") * lit(TwoPowMinus16)))
-        .otherwise(lit(1.0)))
-      .withColumn("status_flag",
-        when(col("is_hold"), lit(2))
-          .when(col("is_elig") && col("flag_clip"), lit(4))
-          .otherwise(lit(0)))
-
-    val encoded = cfg.encoderType match {
-      case "derivative" =>
-        s4.withColumn("signal_re", when(col("is_elig"), col("ratio")).otherwise(lit(0.0)) + 0.0)
-          .withColumn("signal_im", when(col("is_elig"),
-            (col("ratio") - col("prev_ratio")) * lit(cfg.tickDerivativeImagScale.toDouble))
-            .otherwise(lit(0.0)) + 0.0)
-      case "hexad16" =>
-        val phase = ((col("tick_idx") - 1) % 16).cast("int")
-        s4.withColumn("signal_re",
-            col("ratio") * TickFunctions.lutLookup(hexad16Re, phase + 1) + 0.0)
-          .withColumn("signal_im",
-            col("ratio") * TickFunctions.lutLookup(hexad16Im, phase + 1) + 0.0)
-      case "cpm" =>
-        s4.withColumn("acc", pmod(col("cum_inc"), lit(4294967296L)))
-          .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
-          .withColumn("signal_re", when(col("is_pre"), lit(0.0))
-            .otherwise(TickFunctions.lutLookup(cpmLutRe, col("lut_idx") + 1)) + 0.0)
-          .withColumn("signal_im", when(col("is_pre"), lit(0.0))
-            .otherwise(TickFunctions.lutLookup(cpmLutIm, col("lut_idx") + 1)) + 0.0)
-      case "amc" =>
-        // Carrier phase is closed-form in the encoder-call number from
-        // round 0 (hardcoded period-16 increment — reference quirk,
-        // TickHotLoopF32.jl:115; honorAmcCarrierPeriod derives it from
-        // the configured period instead — default-off extension).
-        s4.withColumn("acc", pmod(col("enc_rn") * lit(cfg.amcIncrementQ32), lit(4294967296L)))
-          .withColumn("lut_idx", floor(col("acc") / lit(4194304.0)).cast("int"))
-          .withColumn("signal_re", when(col("is_pre"), lit(0.0))
-            .otherwise(col("ratio") * TickFunctions.lutLookup(cpmLutRe, col("lut_idx") + 1)) + 0.0)
-          .withColumn("signal_im", when(col("is_pre"), lit(0.0))
-            .otherwise(col("ratio") * TickFunctions.lutLookup(cpmLutIm, col("lut_idx") + 1)) + 0.0)
-      case other => throw new IllegalArgumentException(s"unknown encoder: $other")
-    }
-
-    encoded.drop("valid", "is_pre", "is_hold", "is_elig",
-      "clip1", "d1", "d", "clip2", "flag_clip", "elig_rn", "enc_rn",
-      "inv_q16", "ratio", "acc", "lut_idx", "prev_ratio", "cum_inc")
   }
 
   // ----------------------------------------------------------------- T26-T33

@@ -8,10 +8,15 @@ import graft.functions.TickFunctions
 
 /** Oracle-checked queries exercising the tick pipeline on a deterministic
   * tick stream derived from the driver's lineitem table. The DuckDB SQL
-  * mirrors [[TickPipeline]]'s window formulation expression-for-expression
-  * (same integer arithmetic, same double operations in the same order, the
-  * same LUT literals via [[TickFunctions.dlit]]), so outputs hash-match
-  * without tolerance.
+  * restates the pipeline as window queries with the same arithmetic, so
+  * outputs hash-match without tolerance:
+  *   - the hot loop (t03-t06, t09) mirrors [[HotLoopKernel]] operation for
+  *     operation: `FLOAT` (Float32) arithmetic, the Q16 reciprocal rounded
+  *     with `round_even`, every signal component `+ 0` in `FLOAT`, results
+  *     widened to DOUBLE;
+  *   - expansion and bars (t01, t02, t07, t08, t10) mirror
+  *     [[TickPipeline]]'s integer and double expressions in the same order,
+  *     with the same LUT and coefficient literals via [[TickFunctions.dlit]].
   */
 object TickQueries {
 
@@ -32,7 +37,7 @@ object TickQueries {
       .mkString(" + ")
 
   /** Shared derivation of the synthetic tick stream (mirrors
-    * [[TickPipeline.syntheticTicks]] + [[TickPipeline.expandVolume]]).
+    * [[TickPipeline.syntheticTicks]] + [[TickPipeline.expandVolumeChunked]]).
     */
   private val ticksCte: String =
     s"""lines AS (
@@ -59,12 +64,19 @@ object TickQueries {
        |         CASE WHEN replica_idx = 1 THEN line_delta ELSE 0 END AS price_delta
        |  FROM expanded)""".stripMargin
 
-  /** The hot-loop chain up to ratio/normalization/flag, mirroring
-    * [[TickPipeline.hotLoop]] stages 1-6.
+  /** `x` as a DuckDB `FLOAT`: the kernel's Float32 values. */
+  private def f32(x: Any): String = s"CAST($x AS FLOAT)"
+  private val zeroF = f32(0)
+
+  /** The hot-loop chain up to ratio/normalization/flag: row classes,
+    * clipping and 144-tick bar statistics as windows over `tick_idx`,
+    * then [[HotLoopKernel.invQ16]], `ratio` and `normalization` in
+    * `FLOAT`.
     */
   private val hotChainCte: String = {
     val minP = cfg.minPrice; val maxP = cfg.maxPrice
     val maxJ = cfg.maxJump; val winz = cfg.winsorizeDeltaThreshold
+    val twoPowMinus16 = f32(TickFunctions.dlit(HotLoopKernel.TwoPowMinus16.toDouble))
     s"""h1 AS (
        |  SELECT t.*, (raw_price BETWEEN $minP AND $maxP) AS valid,
        |    min(CASE WHEN raw_price BETWEEN $minP AND $maxP THEN tick_idx END)
@@ -121,19 +133,19 @@ object TickQueries {
        |  FROM h6),
        |h8 AS (
        |  SELECT *,
-       |    CASE WHEN k_bars = 0 THEN ${TickPipeline.InvNormPreload}
-       |         ELSE CAST(floor(65536.0 / greatest(
+       |    CASE WHEN k_bars = 0 THEN ${HotLoopKernel.InvNormPreloadQ16}
+       |         ELSE CAST(round_even(${f32(65536)} / CAST(greatest(
        |                CAST(sum_max AS DOUBLE) / k_bars - CAST(sum_min AS DOUBLE) / k_bars,
-       |                1.0) + 0.5) AS BIGINT) END AS inv_q16
+       |                1.0) AS FLOAT), 0) AS INTEGER) END AS inv_q16
        |  FROM h7),
        |h9 AS (
        |  SELECT *,
        |    CASE WHEN is_elig
-       |         THEN CAST(CAST(d AS BIGINT) * inv_q16 AS DOUBLE) * 1.52587890625e-5
-       |         ELSE 0.0 END AS ratio,
+       |         THEN CAST(CAST(d AS BIGINT) * inv_q16 AS FLOAT) * $twoPowMinus16
+       |         ELSE $zeroF END AS ratio,
        |    CASE WHEN is_elig
-       |         THEN 1.0 / (CAST(inv_q16 AS DOUBLE) * 1.52587890625e-5)
-       |         ELSE 1.0 END AS normalization,
+       |         THEN ${f32(1)} / (CAST(inv_q16 AS FLOAT) * $twoPowMinus16)
+       |         ELSE ${f32(1)} END AS normalization,
        |    CASE WHEN is_hold THEN 2
        |         WHEN is_elig AND (clip1 OR clip2) THEN 4
        |         ELSE 0 END AS status_flag
@@ -142,6 +154,11 @@ object TickQueries {
 
   private val outCols =
     "tick_idx, raw_price, price_delta, status_flag, signal_re, signal_im, normalization"
+  private val normDouble = "CAST(normalization AS DOUBLE) AS normalization"
+
+  /** `(lut)[idx + 1]` as a `FLOAT`: the kernel's Float32 LUT entry. */
+  private def lutAt(lut: Array[Double], idx: String): String =
+    f32(s"(${TickFunctions.sqlArray(lut)})[CAST($idx AS INTEGER) + 1]")
 
   // ---------------------------------------------------------------- queries
 
@@ -234,24 +251,24 @@ object TickQueries {
   def qHotDerivative(s: SparkSession, d: String): DataFrame = hotQuery("derivative")(s, d)
   val qHotDerivativeSql: String = hotSql(
     s"""SELECT $outCols FROM (
-       |  SELECT tick_idx, raw_price, price_delta, status_flag, normalization,
-       |    (CASE WHEN is_elig THEN ratio ELSE 0.0 END) + 0.0 AS signal_re,
-       |    (CASE WHEN is_elig THEN (ratio - COALESCE(
+       |  SELECT tick_idx, raw_price, price_delta, status_flag, $normDouble,
+       |    CAST(ratio + $zeroF AS DOUBLE) AS signal_re,
+       |    CAST((CASE WHEN is_elig THEN (ratio - COALESCE(
        |        last_value(CASE WHEN is_elig THEN ratio END IGNORE NULLS)
        |          OVER (ORDER BY tick_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-       |        0.0)) * ${TickFunctions.dlit(cfg.tickDerivativeImagScale.toDouble)}
-       |     ELSE 0.0 END) + 0.0 AS signal_im
+       |        $zeroF)) * ${f32(TickFunctions.dlit(cfg.tickDerivativeImagScale.toDouble))}
+       |     ELSE $zeroF END) + $zeroF AS DOUBLE) AS signal_im
        |  FROM h9)""".stripMargin)
 
   /** T20: HEXAD-16 discrete 16-phase encoder. */
   def qHotHexad16(s: SparkSession, d: String): DataFrame = hotQuery("hexad16")(s, d)
   val qHotHexad16Sql: String = hotSql(
     s"""SELECT $outCols FROM (
-       |  SELECT tick_idx, raw_price, price_delta, status_flag, normalization,
-       |    ratio * (${TickFunctions.sqlArray(TickFunctions.hexad16Re)})
-       |      [CAST((tick_idx - 1) % 16 AS INTEGER) + 1] + 0.0 AS signal_re,
-       |    ratio * (${TickFunctions.sqlArray(TickFunctions.hexad16Im)})
-       |      [CAST((tick_idx - 1) % 16 AS INTEGER) + 1] + 0.0 AS signal_im
+       |  SELECT tick_idx, raw_price, price_delta, status_flag, $normDouble,
+       |    CAST(ratio * ${lutAt(TickFunctions.hexad16Re, "(tick_idx - 1) % 16")}
+       |      + $zeroF AS DOUBLE) AS signal_re,
+       |    CAST(ratio * ${lutAt(TickFunctions.hexad16Im, "(tick_idx - 1) % 16")}
+       |      + $zeroF AS DOUBLE) AS signal_im
        |  FROM h9)""".stripMargin)
 
   /** T21: CPM encoder — phase accumulator as cumulative sum with mod-2^32
@@ -259,22 +276,20 @@ object TickQueries {
     */
   def qHotCpm(s: SparkSession, d: String): DataFrame = hotQuery("cpm")(s, d)
   val qHotCpmSql: String = {
-    val scale = TickFunctions.dlit(2.0 * cfg.cpmModulationIndex.toDouble * 2147483648.0)
+    val scale = f32(TickFunctions.dlit(HotLoopKernel.cpmPhaseScale(cfg).toDouble))
     hotSql(
       s"""SELECT $outCols FROM (
-         |  SELECT tick_idx, raw_price, price_delta, status_flag, normalization,
-         |    CASE WHEN is_pre THEN 0.0 ELSE
-         |      (${TickFunctions.sqlArray(TickFunctions.cpmLutRe)})[CAST(lut_idx AS INTEGER) + 1]
-         |    END + 0.0 AS signal_re,
-         |    CASE WHEN is_pre THEN 0.0 ELSE
-         |      (${TickFunctions.sqlArray(TickFunctions.cpmLutIm)})[CAST(lut_idx AS INTEGER) + 1]
-         |    END + 0.0 AS signal_im
+         |  SELECT tick_idx, raw_price, price_delta, status_flag, $normDouble,
+         |    CAST(CASE WHEN is_pre THEN $zeroF ELSE ${lutAt(TickFunctions.cpmLutRe, "lut_idx")}
+         |    END + $zeroF AS DOUBLE) AS signal_re,
+         |    CAST(CASE WHEN is_pre THEN $zeroF ELSE ${lutAt(TickFunctions.cpmLutIm, "lut_idx")}
+         |    END + $zeroF AS DOUBLE) AS signal_im
          |  FROM hcpm)""".stripMargin,
       extraCte =
         s""",
            |hinc AS (
            |  SELECT *, CASE WHEN is_elig
-           |    THEN CAST(floor(ratio * $scale + 0.5) AS BIGINT) ELSE 0 END AS inc
+           |    THEN CAST(round_even(ratio * $scale, 0) AS BIGINT) ELSE 0 END AS inc
            |  FROM h9),
            |hcpm AS (
            |  SELECT *,
@@ -290,15 +305,11 @@ object TickQueries {
   def qHotAmc(s: SparkSession, d: String): DataFrame = hotQuery("amc")(s, d)
   val qHotAmcSql: String = hotSql(
     s"""SELECT $outCols FROM (
-       |  SELECT tick_idx, raw_price, price_delta, status_flag, normalization,
-       |    CASE WHEN is_pre THEN 0.0 ELSE
-       |      (CASE WHEN is_elig THEN ratio ELSE 0.0 END) *
-       |      (${TickFunctions.sqlArray(TickFunctions.cpmLutRe)})[CAST(lut_idx AS INTEGER) + 1]
-       |    END + 0.0 AS signal_re,
-       |    CASE WHEN is_pre THEN 0.0 ELSE
-       |      (CASE WHEN is_elig THEN ratio ELSE 0.0 END) *
-       |      (${TickFunctions.sqlArray(TickFunctions.cpmLutIm)})[CAST(lut_idx AS INTEGER) + 1]
-       |    END + 0.0 AS signal_im
+       |  SELECT tick_idx, raw_price, price_delta, status_flag, $normDouble,
+       |    CAST(CASE WHEN is_pre THEN $zeroF ELSE ratio * ${lutAt(TickFunctions.cpmLutRe, "lut_idx")}
+       |    END + $zeroF AS DOUBLE) AS signal_re,
+       |    CAST(CASE WHEN is_pre THEN $zeroF ELSE ratio * ${lutAt(TickFunctions.cpmLutIm, "lut_idx")}
+       |    END + $zeroF AS DOUBLE) AS signal_im
        |  FROM hamc)""".stripMargin,
     extraCte =
       s""",
@@ -306,7 +317,7 @@ object TickQueries {
          |  SELECT *,
          |    CAST(floor(((SUM(CASE WHEN NOT is_pre THEN 1 ELSE 0 END)
          |        OVER (ORDER BY tick_idx ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      * 268435456) % 4294967296) / 4194304.0) AS BIGINT) AS lut_idx
+         |      * ${cfg.amcIncrementQ32}) % 4294967296) / 4194304.0) AS BIGINT) AS lut_idx
          |  FROM h9)""".stripMargin)
 
   /** T26-T33: boxcar bar processor over all ticks. */
@@ -432,7 +443,8 @@ object TickQueries {
   def qTickCapture(s: SparkSession, d: String): DataFrame =
     // The capture casts tick_idx long→int, which breaks Catalyst's
     // alias-aware ordering propagation from the hot-loop scan even though
-    // the cast is monotone (values < 2^31 here by the capture window).
+    // the cast is monotone (values < 2^31 here by the capture window;
+    // the capture raises past Int.MaxValue instead of wrapping).
     // The ordered fence re-declares the (unchanged) row order over the
     // 2000 captured rows so the final orderBy stays a no-op.
     Scan.planFenceOrdered(

@@ -17,9 +17,16 @@ import org.apache.spark.sql.types._
   */
 object Capture {
 
+  /** The error a tick capture raises for a `tick_idx` above Int.MaxValue. */
+  val TickIdxOverflow: String =
+    s"tick capture: tick_idx exceeds Int.MaxValue (${Int.MaxValue}); the int tick_idx column would wrap"
+
   /** 7-column tick capture (reference capture_pipeline_data.jl:67-113):
     * skip the first `tickStart` ticks, keep `numRecords`.
-    * Float32/UInt8 reference types map to float/tinyint.
+    * Float32/UInt8 reference types map to float/tinyint. The capture's
+    * `tick_idx` is an int, as in the reference: a captured tick past
+    * Int.MaxValue fails the query with [[TickIdxOverflow]] instead of
+    * wrapping (the session runs with ANSI casts off).
     */
   def tickCapture(signal: DataFrame, tickStart: Long = 0L,
       numRecords: Long = Long.MaxValue): DataFrame = {
@@ -28,7 +35,8 @@ object Capture {
     signal
       .where(col("tick_idx") > tickStart && col("tick_idx") <= hi)
       .select(
-        col("tick_idx").cast("int"),
+        when(col("tick_idx") > Int.MaxValue, raise_error(lit(TickIdxOverflow)))
+          .otherwise(col("tick_idx")).cast("int").as("tick_idx"),
         col("raw_price").cast("int"),
         col("price_delta").cast("int"),
         col("signal_re").cast("float").as("complex_signal_real"),

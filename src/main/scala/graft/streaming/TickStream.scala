@@ -16,8 +16,9 @@ import graft.config.{FlowControlConfig, SignalConfig}
   *
   * The reference is a single sequential stream; the streaming hot loop
   * preserves exactly that semantics with `flatMapGroupsWithState` on a
-  * single key (state = [[HotLoopState]], the same step function as the
-  * reference-parity tests). Micro-batches replace the channel; for
+  * single key (state = [[HotLoopState]], folded by [[HotLoopStep]] with
+  * the batch scan's arithmetic, [[graft.operators.HotLoopKernel]]), so a
+  * stream's outputs equal the batch hot loop's bit for bit. Micro-batches replace the channel; for
   * multi-symbol scale-out, key by instrument instead — each group is an
   * independent sequential stream.
   */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.config.SignalConfig
-import graft.operators.TickPipeline
+import graft.operators.TickReference
 
 /** The file → hot loop path keeps file order across many input splits
   * with no shuffle: `readTickFile` indexes lines in scan order and
@@ -71,8 +71,12 @@ class TickFileSplitSpec extends SparkSpec {
   private val outCols = Seq("tick_idx", "line_idx", "replica_idx", "timestamp",
     "raw_price", "price_delta", "signal_re", "signal_im", "normalization", "status_flag")
 
-  private def rows(df: DataFrame) =
-    df.select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+  // Doubles compare by bit pattern, so signed zeros count.
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.select(outCols.map(col): _*).collect()
+      .map(_.toSeq.map { case d: Double => bits(d); case x => x })
+      .sortBy(_.head.asInstanceOf[Long]).toSeq
 
   test("readTickFile: line_idx is the file-order position among surviving lines") {
     withSmallSplits {
@@ -93,8 +97,15 @@ class TickFileSplitSpec extends SparkSpec {
       assert(stages.groupStages > 0)
       assert(stages.count == 0, "shuffle-write stages on the file -> hot loop path")
 
-      val lines = expected.toDF("line_idx", "ts_str", "bid", "ask", "last", "volume")
-      val reference = rows(TickPipeline.hotLoop(TickPipeline.expandVolume(lines), cfg))
+      // The reference: the plain-Scala expansion of the parsed lines, then
+      // the sequential kernel fold.
+      val ticks = TickReference.expand(expected.map { case (li, ts, _, _, last, vol) =>
+        (li, ts, last, vol) })
+      val reference = ticks.zip(TickReference.hotLoop(ticks, cfg)).map { case (t, o) =>
+        Seq(t.tickIdx, t.lineIdx, t.replicaIdx, t.timestamp, t.rawPrice, t.priceDelta,
+          bits(o.signal_re.toDouble), bits(o.signal_im.toDouble),
+          bits(o.normalization.toDouble), o.status_flag.toInt)
+      }
       assert(chunked.length == expected.map(_._6.toLong).sum)
       assert(chunked == reference)
     }

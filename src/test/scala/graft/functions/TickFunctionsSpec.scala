@@ -33,7 +33,7 @@ class TickFunctionsSpec extends SparkSpec {
   }
 
   test("Q16 preload matches the reference constant") {
-    assert(graft.operators.TickPipeline.InvNormPreload == 7559L)
+    assert(graft.operators.HotLoopKernel.InvNormPreloadQ16 == 7559)
   }
 
   test("HEXAD16 LUT is 16 unit-magnitude phasors at 22.5-degree steps") {

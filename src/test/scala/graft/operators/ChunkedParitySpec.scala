@@ -1,13 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.config.SignalConfig
 
-/** The scalable (prefix-scan) pipeline variants must agree row-for-row,
-  * bit-for-bit with the window formulations the DuckDB oracle mirrors.
+/** The scalable (prefix-scan) pipeline stages must agree row-for-row,
+  * bit-for-bit with their plain-Scala references ([[TickReference]]): the
+  * expansion as a loop over lines, the hot loop as the sequential kernel
+  * fold. The test names keep the names of the window formulations these
+  * references replaced.
   */
 class ChunkedParitySpec extends SparkSpec {
   import spark.implicits._
@@ -18,33 +20,32 @@ class ChunkedParitySpec extends SparkSpec {
 
   // Deterministic pseudo-random tick stream with holds, clips, replicas,
   // and enough rows to cross several 144-tick bars and partitions.
-  private lazy val lines: DataFrame = {
+  private lazy val lineSeq: Seq[(Long, String, Int, Int)] = {
     val rnd = new scala.util.Random(7)
     (1 to 800).map { i =>
       val price = 39000 + rnd.nextInt(5200) - 100
       (i.toLong, f"2025031$i%01d 070000 0000000".take(23), price, 1 + rnd.nextInt(3))
-    }.toDF("line_idx", "ts_str", "last", "volume").repartition(5)
+    }
   }
-
-  private def collectAll(df: DataFrame): Seq[Seq[Any]] = {
-    val cols = df.columns.sorted
-    df.select(cols.map(col): _*).collect().map(_.toSeq.toVector).toVector
-      .sortBy(_.mkString("|"))
-  }
+  private lazy val lines: DataFrame =
+    lineSeq.toDF("line_idx", "ts_str", "last", "volume").repartition(5)
 
   test("expandVolumeChunked == expandVolume") {
-    val a = collectAll(TickPipeline.expandVolume(lines))
-    val b = collectAll(TickPipeline.expandVolumeChunked(lines))
-    assert(a == b)
+    val got = TickPipeline.expandVolumeChunked(lines)
+      .select("tick_idx", "line_idx", "replica_idx", "timestamp", "raw_price", "price_delta")
+      .as[(Long, Long, Int, Long, Int, Int)].collect().sortBy(_._1).toSeq
+    val want = TickReference.expand(lineSeq).map(t =>
+      (t.tickIdx, t.lineIdx, t.replicaIdx, t.timestamp, t.rawPrice, t.priceDelta))
+    assert(got == want)
   }
 
   Seq("derivative", "hexad16", "cpm", "amc").foreach { enc =>
     test(s"hotLoopChunked == hotLoop for $enc") {
-      val ticks = TickPipeline.expandVolume(lines)
-        .select("tick_idx", "timestamp", "raw_price", "price_delta")
-      val a = collectAll(TickPipeline.hotLoop(ticks, cfg.copy(encoderType = enc)))
-      val b = collectAll(TickPipeline.hotLoopChunked(ticks, cfg.copy(encoderType = enc)))
-      assert(a == b)
+      val c = cfg.copy(encoderType = enc)
+      val got = TickReference.bitRows(
+        TickPipeline.hotLoopChunked(TickPipeline.expandVolumeChunked(lines), c))
+      val want = TickReference.bitRows(TickReference.hotLoop(TickReference.expand(lineSeq), c))
+      assert(got == want)
     }
   }
 

@@ -32,7 +32,7 @@ object PipelineProps extends Properties("TickPipeline") {
     Files.writeString(f, lines.zipWithIndex.map { case ((p, v), i) =>
       f"20250319 ${70000 + i}%06d 0520000;$p;${p - 1};$p;$v"
     }.mkString("\n"))
-    TickPipeline.expandVolume(TickPipeline.readTickFile(spark, f.toString))
+    TickPipeline.expandVolumeChunked(TickPipeline.readTickFile(spark, f.toString))
   }
 
   // T7/T8/T9: row count = sum(volume); tick_idx is a gapless 1..N total

@@ -13,7 +13,7 @@ class VolumeExpansionSpec extends SparkSpec {
   private def runFile(lines: String*): Seq[(Long, Int, Int)] = {
     val f = Files.createTempFile("ticks", ".txt")
     Files.writeString(f, lines.mkString("\n"))
-    val df = TickPipeline.expandVolume(TickPipeline.readTickFile(spark, f.toString))
+    val df = TickPipeline.expandVolumeChunked(TickPipeline.readTickFile(spark, f.toString))
     df.select($"tick_idx", $"raw_price", $"price_delta")
       .as[(Long, Int, Int)].collect().sortBy(_._1).toSeq
   }

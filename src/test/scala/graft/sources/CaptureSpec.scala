@@ -33,6 +33,19 @@ class CaptureSpec extends SparkSpec {
     assert(back.count() == 500)
   }
 
+  test("tick capture fails loudly on a tick_idx past Int.MaxValue instead of wrapping") {
+    def capture(idx: Long) =
+      Seq((idx, 40000, 0, 0.0, 0.0, 1.0, 0))
+        .toDF("tick_idx", "raw_price", "price_delta", "signal_re", "signal_im",
+          "normalization", "status_flag")
+        .transform(Capture.tickCapture(_))
+    assert(capture(Int.MaxValue.toLong).collect().map(_.getInt(0)).toSeq == Seq(Int.MaxValue))
+    val e = intercept[Exception](capture(1L << 31).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains(Capture.TickIdxOverflow)), e)
+  }
+
   test("bar capture: 11-col schema and CSV round-trip preserves values exactly") {
     val bars = TickPipeline.bars(ticks, BarConfig(enabled = true, ticksPerBar = 21,
       barMethod = "boxcar"))

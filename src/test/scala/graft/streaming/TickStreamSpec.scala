@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.config.SignalConfig
+import graft.operators.TickReference
 
 class TickStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -213,24 +214,37 @@ class TickStreamSpec extends SparkSpec {
     }
   }
 
+  // Both paths run HotLoopKernel, so the batch's DOUBLE columns hold the
+  // stream's Float32 values exactly (the name predates the shared kernel).
   test("streaming f32 hot loop tracks the batch double pipeline to 1e-5") {
     val ticks = mkTicks(500)
     val amc8 = cfg.copy(encoderType = "amc", amcCarrierPeriod = 8f, honorAmcCarrierPeriod = true)
     Seq(cfg, amc8).foreach { c =>
-      val seq = HotLoopStep.run(ticks, c)
-      val batch = graft.operators.TickPipeline.hotLoop(
-        ticks.toDF(), c)
-        .select($"tick_idx", $"signal_re", $"signal_im", $"normalization", $"status_flag")
-        .as[(Long, Double, Double, Double, Int)].collect().sortBy(_._1)
-      assert(seq.size == batch.length)
-      seq.zip(batch).foreach { case (f32, (idx, re, im, norm, flag)) =>
-        val at = s"${c.encoderType} at $idx"
-        assert(f32.tick_idx == idx)
-        assert(f32.status_flag.toInt == flag, s"flag $at")
-        assert(math.abs(f32.normalization - norm) <= 1e-4 * math.abs(norm) + 1e-6, s"norm $at")
-        assert(math.abs(f32.signal_re - re) <= 1e-4 * math.abs(re) + 1e-5, s"re $at")
-        assert(math.abs(f32.signal_im - im) <= 1e-4 * math.abs(im) + 1e-5, s"im $at")
-      }
+      assert(TickReference.bitRows(graft.Graft.hotLoop(ticks.toDF(), c)) ==
+        TickReference.bitRows(HotLoopStep.run(ticks, c)), c.encoderType)
+    }
+  }
+
+  test("hot-loop stream resumes its stored state across a restart from the checkpoint") {
+    implicit val sqlCtx = spark.sqlContext
+    val ticks = mkTicks(600)
+    Seq(cfg, cfg.copy(encoderType = "cpm")).foreach { c =>
+      val input = MemoryStream[TickIn]
+      val ckpt = Files.createTempDirectory("ckpt_restart").toString
+      val got = scala.collection.mutable.ArrayBuffer.empty[TickOut]
+      def start() = graft.Graft.hotLoopStream(input.toDS(), c).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((ds: org.apache.spark.sql.Dataset[TickOut], _: Long) => { got ++= ds.collect(); () })
+        .start()
+      val first = start()
+      try { input.addData(ticks.take(350): _*); first.processAllAvailable() }
+      finally first.stop()
+      input.addData(ticks.drop(350): _*)
+      val second = start()
+      try second.processAllAvailable()
+      finally second.stop()
+      assert(TickReference.bitRows(got.toSeq) == TickReference.bitRows(HotLoopStep.run(ticks, c)),
+        c.encoderType)
     }
   }
 
